@@ -49,7 +49,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 #
 # The external correctness gate verifies registry entries in declaration
 # order, capped at 50 per round.  Since round 5 the order is DATA-DERIVED,
-# not hand-maintained: scripts/rotation.py reads every CORRECTNESS_r0*.json
+# not hand-maintained: scripts/rotation.py reads every CORRECTNESS_r*.json
 # the driver has produced and sorts the declared queries
 # oldest-attestation-first —
 #   1. queries with no green driver row yet (never attested) come first;
@@ -59,7 +59,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 #   3. ties keep the previous declaration order (stable sort).
 # tests/test_rotation.py asserts this file's declared order matches the
 # computed order exactly, so a rotation that drifts fails CI.  History of
-# past windows lives in the CORRECTNESS_r0*.json files themselves and in
+# past windows lives in the CORRECTNESS_r*.json files themselves and in
 # DESIGN.md; rounds 1-4 rotated by hand-maintained comments (one miscount,
 # caught by round-3 ADVICE — the reason this is now automated).
 # Every query keeps a local DuckDB parity test regardless of position
@@ -68,58 +68,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # (driver confs, not ours) at sf0.01.
 # ---------------------------------------------------------------------------
 QUERIES: dict[str, QueryFn] = {
-    # ----- latest green driver row: r8 -----
-    "join_inner": R.join_inner,
-    "union_all": R.union_all,
-    "sort_multi": R.sort_multi,
-    "topk": R.topk,
-    "agg_sum_by_key": R.agg_sum_by_key,
-    "agg_count_distinct": R.agg_count_distinct,
-    "tpch_q3": R.tpch_q3,
-    "tpch_q4": R.tpch_q4,
-    "tpch_q5": R.tpch_q5,
-    "tpch_q6": R.tpch_q6,
-    "tpch_q7": R.tpch_q7,
-    "tpch_q10": R.tpch_q10,
-    "tpch_q12": R.tpch_q12,
-    "tpch_q14": R.tpch_q14,
-    "tpch_q15": R.tpch_q15,
-    "tpch_q18": R.tpch_q18,
-    "tpch_q19": R.tpch_q19,
-    "tpch_q1": TF.tpch_q1,
-    "tpch_q2": TF.tpch_q2,
-    "tpch_q8": TF.tpch_q8,
-    "tpch_q9": TF.tpch_q9,
-    "tpch_q11": TF.tpch_q11,
-    "tpch_q13": TF.tpch_q13,
-    "tpch_q16": TF.tpch_q16,
-    "tpch_q17": TF.tpch_q17,
-    "tpch_q20": TF.tpch_q20,
-    "tpch_q21": TF.tpch_q21,
-    "tpch_q22": TF.tpch_q22,
-    "upsert_by_key": RS.upsert_by_key_query,
-    "merge_upsert_scale": RS.merge_upsert_scale_query,
-    "zorder_cells": PT.zorder_cells,
-    "bloom_prune_join": PT.bloom_prune_join,
-    "llm_prep_pipeline": LP.llm_prep_pipeline,
-    "dedup_minhash_lsh": D.minhash_lsh,
-    "dedup_components": D.dedup_components,
-    "approx_stats": XR.approx_stats,
-    "curation_pipeline": SC.curation_pipeline,
-    "curation_incremental": SC.curation_incremental,
-    "sequence_packing": LP.sequence_packing,
-    "multimodal_features": MM.multimodal_features,
-    "knn_cosine_ivf": SIM.knn_cosine_ivf,
-    "stream_sessionize": ST.stream_sessionize_stateful,
-    "stream_session_window": ST.stream_session_window,
-    "xml_roundtrip": CV.xml_roundtrip,
-    "binary_files_ingest": MM.binary_files_ingest,
     # ----- latest green driver row: r9 -----
-    "avro_roundtrip": AV.avro_roundtrip,
-    "iceberg_native_scan": IN.iceberg_native_scan,
-    "iceberg_native_mor": IN.iceberg_native_mor,
-    "iceberg_native_time_travel": IN.iceberg_native_time_travel,
-    "iceberg_export_roundtrip": IN.iceberg_export_roundtrip,
     "iceberg_bucket_prune": IN.iceberg_bucket_prune,
     "iceberg_month_rollup": IN.iceberg_month_rollup,
     "jsonl_shard_export": LP.jsonl_shard_export,
@@ -317,6 +266,57 @@ QUERIES: dict[str, QueryFn] = {
     "scan_full": R.scan_full,
     "project_literals": R.project_literals,
     "filter_conj": R.filter_conj,
+    # ----- latest green driver row: r13 -----
+    "join_inner": R.join_inner,
+    "union_all": R.union_all,
+    "sort_multi": R.sort_multi,
+    "topk": R.topk,
+    "agg_sum_by_key": R.agg_sum_by_key,
+    "agg_count_distinct": R.agg_count_distinct,
+    "tpch_q3": R.tpch_q3,
+    "tpch_q4": R.tpch_q4,
+    "tpch_q5": R.tpch_q5,
+    "tpch_q6": R.tpch_q6,
+    "tpch_q7": R.tpch_q7,
+    "tpch_q10": R.tpch_q10,
+    "tpch_q12": R.tpch_q12,
+    "tpch_q14": R.tpch_q14,
+    "tpch_q15": R.tpch_q15,
+    "tpch_q18": R.tpch_q18,
+    "tpch_q19": R.tpch_q19,
+    "tpch_q1": TF.tpch_q1,
+    "tpch_q2": TF.tpch_q2,
+    "tpch_q8": TF.tpch_q8,
+    "tpch_q9": TF.tpch_q9,
+    "tpch_q11": TF.tpch_q11,
+    "tpch_q13": TF.tpch_q13,
+    "tpch_q16": TF.tpch_q16,
+    "tpch_q17": TF.tpch_q17,
+    "tpch_q20": TF.tpch_q20,
+    "tpch_q21": TF.tpch_q21,
+    "tpch_q22": TF.tpch_q22,
+    "upsert_by_key": RS.upsert_by_key_query,
+    "merge_upsert_scale": RS.merge_upsert_scale_query,
+    "zorder_cells": PT.zorder_cells,
+    "bloom_prune_join": PT.bloom_prune_join,
+    "llm_prep_pipeline": LP.llm_prep_pipeline,
+    "dedup_minhash_lsh": D.minhash_lsh,
+    "dedup_components": D.dedup_components,
+    "approx_stats": XR.approx_stats,
+    "curation_pipeline": SC.curation_pipeline,
+    "curation_incremental": SC.curation_incremental,
+    "sequence_packing": LP.sequence_packing,
+    "multimodal_features": MM.multimodal_features,
+    "knn_cosine_ivf": SIM.knn_cosine_ivf,
+    "stream_sessionize": ST.stream_sessionize_stateful,
+    "stream_session_window": ST.stream_session_window,
+    "xml_roundtrip": CV.xml_roundtrip,
+    "binary_files_ingest": MM.binary_files_ingest,
+    "avro_roundtrip": AV.avro_roundtrip,
+    "iceberg_native_scan": IN.iceberg_native_scan,
+    "iceberg_native_mor": IN.iceberg_native_mor,
+    "iceberg_native_time_travel": IN.iceberg_native_time_travel,
+    "iceberg_export_roundtrip": IN.iceberg_export_roundtrip,
 }
 
 # Queries intentionally lacking a DuckDB oracle, with the reason the

@@ -3,7 +3,7 @@
 The external correctness gate verifies the FIRST 50 registry entries each
 round.  Through round 4 the window order lived in hand-maintained comments,
 which drifted once (round-3 ADVICE caught a miscount).  This script makes
-the ordering data-derived: it reads every ``CORRECTNESS_r0*.json`` the
+the ordering data-derived: it reads every ``CORRECTNESS_r*.json`` the
 driver has produced and sorts the declared queries oldest-attestation-first:
 
   1. queries with NO green driver row yet (never attested, or latest row
@@ -46,10 +46,14 @@ def _tracked_artifacts(repo: str) -> list[str]:
     committed tree read red at judge time two rounds running (round-6 and
     round-7 verdicts) — the untracked artifact shifted the data-derived
     order out from under the already-frozen registry.  Pinning to tracked
-    files makes the committed tree self-consistent by construction: the
-    fresh artifact participates only once the round-N+1 re-sort commits it
-    together with the reordered registry.  Falls back to the glob when git
-    is unavailable (e.g. an exported tarball).
+    files keeps an untracked artifact from moving the order, but it does
+    NOT make the committed tree self-consistent by construction: any
+    commit that tracks a new CORRECTNESS_rN.json changes the expected
+    order at once (round 13's commit did), and tests/test_rotation.py
+    reads red until the registry re-sort lands.  Every commit that adds an
+    attestation artifact must therefore carry, or be directly followed by,
+    the re-sort.  Falls back to the glob when git is unavailable (e.g. an
+    exported tarball).
     """
     try:
         out = subprocess.run(

@@ -1,7 +1,7 @@
 """The registry's declared order IS the rotation order.
 
 scripts/rotation.py derives the driver-correctness window order from the
-CORRECTNESS_r0*.json attestation history (oldest-attestation-first, never-
+CORRECTNESS_r*.json attestation history (oldest-attestation-first, never-
 attested queries leading).  These tests pin the registry to that order so
 the window contract can't drift the way the hand-maintained comments once
 did (round-3 ADVICE caught a miscount).
@@ -45,7 +45,7 @@ def test_untracked_artifact_does_not_shift_order(tmp_path):
     redden this suite at judge time.  The order is now derived from
     git-TRACKED artifacts only, so an untracked future artifact must not
     change the expected order.  Simulated here by writing a fake
-    CORRECTNESS_r99.json next to the real ones in a git-tracked copy —
+    CORRECTNESS_r98.json next to the real ones in a git-tracked copy —
     cheaper: assert directly that _tracked_artifacts() excludes a file
     that exists on disk but is not in the index."""
     import json

@@ -147,6 +147,34 @@ class CommitConflictError(RuntimeError):
     the whole operation against the new current snapshot."""
 
 
+def publish_version(path: str, text: str) -> None:
+    """Publish ``text`` as the immutable metadata version ``path`` — the
+    one commit point of both table layouts (``LocalTable`` and
+    ``IcebergNativeTable``). Iceberg's optimistic metadata swap
+    (``IcebergJavaApiAppend.java:92-94``) on a posix filesystem: the
+    text goes to a temp file in the same directory, which ``os.link``
+    then gives the version name. The link fails with ``FileExistsError``
+    iff another committer published that version first, so of two
+    committers that read version N and race for N+1 exactly one wins;
+    the loser raises :class:`CommitConflictError` with no effect on the
+    table. A version name therefore only ever names a complete file: a
+    writer killed before the link leaves just its ``*.json.tmp``, which
+    orphan sweeps reclaim after their grace period."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".json.tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            raise CommitConflictError(
+                f"{os.path.basename(path)} was committed concurrently; "
+                "re-read and retry the operation"
+            ) from None
+    finally:
+        os.unlink(tmp)
+
+
 class LocalTable:
     """Snapshot-versioned parquet table (lakehouse-lite).
 
@@ -158,16 +186,12 @@ class LocalTable:
         <root>/_metadata.v00001.json  ...  (current = highest version file)
 
     Each metadata file is immutable and complete (full snapshot log), and
-    is published by hard-linking a fully-written temp file to its
-    versioned name — ``os.link`` fails with ``FileExistsError`` iff that
-    version was already published, which makes the publish a true
-    compare-and-swap on ``current``: of two racing committers that both
-    read version N and try to publish N+1, exactly one link succeeds; the
-    loser raises :class:`CommitConflictError` with no effect on the table.
-    This is Iceberg's optimistic metadata-swap commit protocol
-    (``IcebergJavaApiAppend.java:92-94``) scaled down to a posix
-    filesystem. Each snapshot records its parent, operation, and schema
-    for time travel and audit.
+    is published by :func:`publish_version`, a compare-and-swap on
+    ``current``: of two racing committers that both read version N and
+    try to publish N+1, exactly one succeeds; the loser raises
+    :class:`CommitConflictError` with no effect on the table. Each
+    snapshot records its parent, operation, and schema for time travel
+    and audit.
     """
 
     META_PREFIX = "_metadata.v"
@@ -215,22 +239,9 @@ class LocalTable:
         return self._read_meta_versioned()[0]
 
     def _publish_meta(self, meta: dict, version: int) -> None:
-        """Atomically publish complete metadata as the given version.
-        The hard link is the compare-and-swap: it succeeds iff no other
-        committer has published this version."""
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".json.tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(meta, f, indent=2)
-            try:
-                os.link(tmp, self._meta_path(version))
-            except FileExistsError:
-                raise CommitConflictError(
-                    f"version {version} was committed concurrently; "
-                    "re-read and retry the operation"
-                ) from None
-        finally:
-            os.unlink(tmp)
+        """Publish complete metadata as the given version (see
+        :func:`publish_version`)."""
+        publish_version(self._meta_path(version), json.dumps(meta, indent=2))
 
     # ---- snapshot surface ----------------------------------------------
     @property

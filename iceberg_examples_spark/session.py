@@ -45,6 +45,14 @@ def get_spark(
     ``endpoint``, ``path_style`` — the reference's object-store surface
     (``Setup.java:31-36``) as pure configuration.
     """
+    # Python workers import this package by name, and they inherit the
+    # JVM's environment, not the driver's sys.path: put the package root
+    # on PYTHONPATH before the JVM launches so workers find it from any
+    # working directory (no effect once a JVM is already running)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = os.environ.get("PYTHONPATH", "")
+    if root not in paths.split(os.pathsep):
+        os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (root, paths) if p)
     n = _default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)

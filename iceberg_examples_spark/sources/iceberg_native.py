@@ -37,12 +37,18 @@ by construction). File lists ride the driver the same way Iceberg's own
 ``planFiles()`` does.
 
 Concurrency: commits follow HadoopTables' optimistic protocol — every
-file is written under a unique per-attempt name, the new
-``vN.metadata.json`` is CLAIMED with an exclusive create, and a loser
-raises :class:`~iceberg_examples_spark.catalog.CommitConflictError` to
-re-derive and retry (its orphaned files are collectable by
-``remove_orphan_files``). ``version-hint.text`` updates last, so a
-racing reader sees either complete tree, never a partial one.
+file is written under a unique per-attempt name, and the new
+``vN.metadata.json`` is published by
+:func:`~iceberg_examples_spark.catalog.publish_version` (a complete temp
+file hard-linked to the version name), the same compare-and-swap
+``LocalTable`` commits through. A loser raises
+:class:`~iceberg_examples_spark.catalog.CommitConflictError` to re-derive
+and retry (its orphaned files are collectable by
+``remove_orphan_files``). A version file only ever appears complete, so
+the link IS the commit: ``version-hint.text`` is swapped afterwards as a
+hint, and readers roll forward over any published successor of the
+hinted version — a writer killed between the link and the hint swap
+leaves a table that reads and commits normally.
 
 Schema evolution (round 10): ``update_schema`` commits a NEW schema
 (fresh schema-id, ids never reused) and scans resolve every data file
@@ -711,6 +717,25 @@ def _strip_scheme(p: str) -> str:
     return p[5:] if p.startswith("file:") else p
 
 
+def _lineage(meta: dict, tip: int | None = None, stop: int | None = None) -> list[dict]:
+    """Ancestry of snapshot ``tip`` (default: the current snapshot),
+    oldest first: the parent chain back to the root, to ``stop`` if the
+    chain reaches it, or to the oldest ancestor still in ``meta``. An
+    ancestor removed by ``expire_snapshots`` ends the walk; the first
+    element's ``parent-snapshot-id`` then names a snapshot ``meta`` no
+    longer has, which callers that must not skip history check."""
+    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
+    chain: list[dict] = []
+    sid = meta.get("current-snapshot-id") if tip is None else tip
+    while sid in snaps:
+        chain.append(snaps[sid])
+        if sid == stop:
+            break
+        sid = snaps[sid].get("parent-snapshot-id")
+    chain.reverse()
+    return chain
+
+
 # Java URI quoting, fallback for when the JVM helper is unreachable:
 # java.net.URI (what org.apache.hadoop.fs.Path rides) percent-encodes
 # ONLY characters illegal in a URI path — space, %, ?, #, and a small
@@ -751,8 +776,23 @@ class IcebergNativeTable:
     # -- metadata tree -------------------------------------------------
 
     def _current_version(self) -> int:
-        with open(os.path.join(self.meta_dir, "version-hint.text")) as f:
-            return int(f.read().strip())
+        """The hinted version, rolled forward over every published
+        successor (HadoopTables' reader does the same): the link in
+        :meth:`_publish_metadata` commits a version before the hint
+        names it. A missing hint reads as 0, so a table whose creating
+        writer died before its first hint swap is still found."""
+        try:
+            with open(os.path.join(self.meta_dir, "version-hint.text")) as f:
+                v = int(f.read().strip())
+        except FileNotFoundError:
+            v = 0
+        while os.path.exists(
+            os.path.join(self.meta_dir, f"v{v + 1}.metadata.json")
+        ):
+            v += 1
+        if v == 0:
+            raise FileNotFoundError(f"no Iceberg table at {self.location}")
+        return v
 
     def _metadata(self) -> dict:
         return self._read_tree()[0]
@@ -762,7 +802,7 @@ class IcebergNativeTable:
         ONCE and that exact file is loaded — calling _metadata() and
         _current_version() separately can straddle a concurrent publish
         and pair vN content with version N+1, letting a stale commit
-        pass the exclusive-create CAS."""
+        pass the publish CAS."""
         v = self._current_version()
         with open(os.path.join(self.meta_dir, f"v{v}.metadata.json")) as f:
             return json.load(f), v
@@ -773,14 +813,19 @@ class IcebergNativeTable:
             s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
         )
 
+    @staticmethod
+    def _schema_ddl(meta: dict, sch: dict | None = None) -> str:
+        """DDL of ``sch`` (default: the current schema). Needs no
+        SparkSession, so the stream sources' plan workers use it too."""
+        sch = sch or IcebergNativeTable._current_schema(meta)
+        return ", ".join(
+            f"{f['name']} {_ice_to_ddl(f['type'])}" for f in sch["fields"]
+        )
+
     def _schema_struct(self, meta: dict, sch: dict | None = None) -> StructType:
         from pyspark.sql.types import _parse_datatype_string
 
-        sch = sch or self._current_schema(meta)
-        ddl = ", ".join(
-            f"{f['name']} {_ice_to_ddl(f['type'])}" for f in sch["fields"]
-        )
-        return _parse_datatype_string(ddl)
+        return _parse_datatype_string(self._schema_ddl(meta, sch))
 
     @staticmethod
     def _resolve_to_current(
@@ -840,7 +885,8 @@ class IcebergNativeTable:
             return snaps[eligible[-1]["snapshot-id"]]
         return snaps[meta["current-snapshot-id"]]
 
-    def _manifests(self, snapshot: dict) -> list[dict]:
+    @staticmethod
+    def _manifests(snapshot: dict) -> list[dict]:
         if "manifest-list" not in snapshot and "manifests" in snapshot:
             # format-version 1 allowed snapshots to INLINE the manifest
             # paths instead of pointing at a manifest-list file (the
@@ -861,12 +907,12 @@ class IcebergNativeTable:
             _, _, rows = read_container(f.read())
             return list(rows)
 
-    def _entries(self, manifest_path: str) -> list[dict]:
-        return self._entries_and_schema(manifest_path)[1]
+    @staticmethod
+    def _entries(manifest_path: str) -> list[dict]:
+        return IcebergNativeTable._entries_and_schema(manifest_path)[1]
 
-    def _entries_and_schema(
-        self, manifest_path: str
-    ) -> tuple[dict | None, list[dict]]:
+    @staticmethod
+    def _entries_and_schema(manifest_path: str) -> tuple[dict | None, list[dict]]:
         """(write-time table schema, entry rows) for one manifest. The
         schema is the one this manifest's files were WRITTEN under —
         embedded in the manifest's Avro file metadata under the spec's
@@ -2608,11 +2654,7 @@ class IcebergNativeTable:
             raise ValueError(f"unknown ref {name!r}")
         target = refs[to_branch]["snapshot-id"]
         head = refs[name]["snapshot-id"]
-        snaps = {s["snapshot-id"]: s for s in meta["snapshots"]}
-        sid = target
-        while sid is not None and sid != head:
-            sid = snaps[sid].get("parent-snapshot-id")
-        if sid != head:
+        if _lineage(meta, target, stop=head)[0]["snapshot-id"] != head:
             raise ValueError(
                 f"{name!r} ({head}) is not an ancestor of "
                 f"{to_branch!r} ({target}): not a fast-forward"
@@ -3682,7 +3724,6 @@ class IcebergNativeTable:
                 "row-lineage changelog requires format-version 3: call "
                 "upgrade_format_version(3) first"
             )
-        snaps = {s["snapshot-id"]: s for s in meta["snapshots"]}
         # walk the CURRENT lineage (parent chain) from the tip, NOT
         # sequence order: after a rollback the abandoned snapshots are
         # not ancestors and must not fabricate change events
@@ -3691,23 +3732,17 @@ class IcebergNativeTable:
             if to_snapshot_id is not None
             else meta["current-snapshot-id"]
         )
-        chain: list[dict] = []
-        sid = tip
-        while sid is not None:
-            s = snaps[sid]
-            chain.append(s)
-            if from_snapshot_id is not None and sid == from_snapshot_id:
-                break
-            sid = s.get("parent-snapshot-id")
-        chain.reverse()
+        chain = _lineage(meta, tip, stop=from_snapshot_id)
+        if not chain:
+            raise ValueError(f"unknown snapshot {tip}")
         if (
             from_snapshot_id is not None
             and chain[0]["snapshot-id"] != from_snapshot_id
         ):
             raise ValueError(
                 f"snapshot {from_snapshot_id} is not an ancestor of "
-                f"{tip}; a rolled-back snapshot has no changelog on "
-                "the current lineage"
+                f"{tip} on the retained lineage; a rolled-back or expired "
+                "snapshot has no changelog"
             )
         out = None
         end_schema_id = chain[-1].get(
@@ -4134,17 +4169,15 @@ class IcebergNativeTable:
             max_age = r.get("max-snapshot-age-ms")
             if min_keep is None and max_age is None:
                 continue
-            sid, depth = r["snapshot-id"], 0
-            while sid is not None and sid in snaps:
-                s = snaps[sid]
+            for depth, s in enumerate(
+                reversed(_lineage(meta, r["snapshot-id"]))
+            ):
                 young = (
                     max_age is not None
                     and now - s.get("timestamp-ms", 0) <= max_age
                 )
                 if depth < (min_keep or 1) or young:
-                    kept_ids.add(sid)
-                depth += 1
-                sid = s.get("parent-snapshot-id")
+                    kept_ids.add(s["snapshot-id"])
         if older_than_ms is not None:
             # age gate: anything at/after the cutoff is retained
             kept_ids |= {
@@ -4176,8 +4209,8 @@ class IcebergNativeTable:
     def remove_orphan_files(self, older_than_s: float | None = None) -> list[str]:
         """Delete data/metadata files no retained snapshot references
         (driver-side: walks the file LISTS, tiny; unlinks are per-file).
-        Returns the removed paths, parquet data files and manifest/
-        manifest-list avro alike.
+        Returns the removed paths: parquet data files, manifest/
+        manifest-list avro, and temp files of killed publishers.
 
         ``older_than_s`` (default 3 days, the real procedure's
         ``older_than`` contract): only files whose mtime is older are
@@ -4211,13 +4244,16 @@ class IcebergNativeTable:
                     removed.append(p)
         for n in sorted(os.listdir(self.meta_dir)):
             p = os.path.abspath(os.path.join(self.meta_dir, n))
-            if (
-                n.endswith(".avro")
-                and p not in live
-                and os.path.getmtime(p) <= cutoff
-            ):
-                os.unlink(p)
-                removed.append(p)
+            # a publisher killed before its link or its hint swap leaves
+            # a *.tmp here; an in-flight one's survives the grace period
+            if not (n.endswith(".tmp") or (n.endswith(".avro") and p not in live)):
+                continue
+            try:
+                if os.path.getmtime(p) <= cutoff:
+                    os.unlink(p)
+                    removed.append(p)
+            except FileNotFoundError:
+                pass  # an in-flight publisher already removed its tmp
         return removed
 
     @staticmethod
@@ -4721,38 +4757,34 @@ class IcebergNativeTable:
         self._publish_metadata(meta, version)
 
     def _publish_metadata(self, meta: dict, read_version: int) -> None:
-        """HadoopTables' optimistic commit: CLAIM v{N+1}.metadata.json
-        with an exclusive create — if another writer published N+1 since
-        this commit read N, the create fails and the whole commit raises
-        CommitConflictError for the caller to re-derive and retry
-        (already-written data files become orphans, collectable by
-        remove_orphan_files — the real library's failure mode too).
-        version-hint updates LAST: readers that race the hint see either
-        the old or the new COMPLETE tree, never a partial one."""
-        from iceberg_examples_spark.catalog import CommitConflictError
+        """HadoopTables' optimistic commit: publish v{N+1}.metadata.json
+        through :func:`~iceberg_examples_spark.catalog.publish_version`
+        — if another writer published N+1 since this commit read N, the
+        link fails and the whole commit raises CommitConflictError for
+        the caller to re-derive and retry (already-written data files
+        become orphans, collectable by remove_orphan_files — the real
+        library's failure mode too). The link is the commit point;
+        version-hint is swapped after it, and :meth:`_current_version`
+        rolls forward over a published version the hint does not name
+        yet, so a writer killed between the two leaves a table that
+        reads and commits normally."""
+        from iceberg_examples_spark.catalog import publish_version
 
+        if read_version >= 1:
+            meta.setdefault("metadata-log", []).append(
+                {
+                    "timestamp-ms": int(time.time() * 1000),
+                    "metadata-file": os.path.join(
+                        self.meta_dir, f"v{read_version}.metadata.json"
+                    ),
+                }
+            )
+            meta["metadata-log"] = meta["metadata-log"][-100:]
         new_v = read_version + 1
-        path = os.path.join(self.meta_dir, f"v{new_v}.metadata.json")
-        try:
-            fh = open(path, "x")
-        except FileExistsError:
-            raise CommitConflictError(
-                f"metadata version v{new_v} was published by a concurrent "
-                f"writer since version {read_version} was read; re-read "
-                "and retry the commit"
-            ) from None
-        with fh:
-            if read_version >= 1:
-                meta.setdefault("metadata-log", []).append(
-                    {
-                        "timestamp-ms": int(time.time() * 1000),
-                        "metadata-file": os.path.join(
-                            self.meta_dir, f"v{read_version}.metadata.json"
-                        ),
-                    }
-                )
-                meta["metadata-log"] = meta["metadata-log"][-100:]
-            json.dump(meta, fh, indent=1)
+        publish_version(
+            os.path.join(self.meta_dir, f"v{new_v}.metadata.json"),
+            json.dumps(meta, indent=1),
+        )
         # atomic hint swap: a truncate-then-write ("w") window lets a
         # concurrent reader (e.g. the polling streaming source) observe
         # an EMPTY hint file; os.replace is atomic on POSIX, so readers

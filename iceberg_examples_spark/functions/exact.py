@@ -8,9 +8,24 @@ BIGINT (exact, associative, shuffle-order-independent), and convert back
 with one deterministic double op at the end. Both engines then compute
 bit-identical float64 results from identical integer inputs.
 
-The per-row ``round(x * scale)`` is safe because the source columns carry
-fixed decimal precision (money = 2 dp, discount/tax = 2 dp), so
-``x * scale`` is within ~1e-9 of an integer — never near a .5 boundary.
+The per-row step rounds ``v = x * scale`` to the nearest integer, ties away
+from zero — what ``round(v)`` means in both engines. It is not spelled
+``round(v)``: Spark evaluates ``round`` on a DOUBLE through
+``BigDecimal.valueOf(v).setScale(0, HALF_UP)``, a ``Double.toString`` and a
+BigDecimal per row, which made ``round`` the costliest step of TPC-H Q1's
+five sums. ``_round_sql`` emits a floor/ceil form with the same result:
+below 2**52, ``v - floor(v)`` is exact or rounds monotonically toward 0.5,
+and 0.5 is representable, so a computed fraction below (above) 0.5 means the
+true fraction is below (above) it and ``floor`` (``ceil``) is the answer.
+Everything else falls through to ``round`` itself: a computed fraction of
+exactly 0.5 (a tie, or a near-tie whose fraction rounded onto 0.5), NaN,
++-inf and |v| >= 2**52, where every double is already an integer. For a
+whole-number result, Spark's decimal-string HALF_UP and DuckDB's
+half-away-from-zero both equal "nearest, ties away from zero" on the binary
+value, so the fragment is equal to ``round(v)`` in both engines. The
+fragment names ``v`` nine times, so it plans larger than ``round``: a query
+with very many money columns over few rows (``similarity.embedding_stats``)
+keeps ``round``.
 
 This is also the right 100 TB posture: integer sums are cheaper than
 decimal-128 sums and immune to partial-aggregation reorder under AQE.
@@ -26,10 +41,35 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def _round_sql(v: str) -> str:
+    """``round(v)`` for a parenthesized SQL expression ``v``, without the
+    per-row BigDecimal (see the module docstring for why it is exact)."""
+    return (
+        f"CASE WHEN NOT (abs({v}) < 4503599627370496.0) THEN round({v})"
+        f" WHEN {v} - floor({v}) < 0.5 THEN floor({v})"
+        f" WHEN {v} - floor({v}) > 0.5 THEN ceil({v})"
+        f" ELSE round({v}) END"
+    )
+
+
+def round_half_away_np(v):
+    """numpy twin of ``_round_sql``: nearest integer, ties away from zero,
+    as float64 (``np.round`` rounds ties to even). The floor rule runs on
+    a = |v|, where ``a - floor(a)`` is always exact (Sterbenz), so a
+    fraction of 0.5 is a real tie and takes the magnitude up; the sign is
+    put back last. NaN and +-inf pass through."""
+    import numpy as np
+
+    a = np.abs(v)
+    f = np.floor(a)
+    with np.errstate(invalid="ignore"):  # inf - inf
+        return np.copysign(f + (a - f >= 0.5), v)
+
+
 def money_sum_sql(expr: str, scale: int = 10000) -> str:
     """Exact sum of a fixed-decimal SQL expression, as double. The same
     text is valid Spark SQL and DuckDB SQL."""
-    return f"cast(sum(cast(round(({expr}) * {scale}) as bigint)) as double) / {scale}.0"
+    return f"cast(sum({money_cents_sql(expr, scale)}) as double) / {scale}.0"
 
 
 def money_sum(expr: str, alias: str, scale: int = 10000) -> Column:
@@ -39,7 +79,7 @@ def money_sum(expr: str, alias: str, scale: int = 10000) -> Column:
 def money_avg_sql(expr: str, scale: int = 10000) -> str:
     # one integer sum + one integer count -> two deterministic double ops
     return (
-        f"cast(sum(cast(round(({expr}) * {scale}) as bigint)) as double)"
+        f"cast(sum({money_cents_sql(expr, scale)}) as double)"
         f" / {scale}.0 / cast(count({expr}) as double)"
     )
 
@@ -53,4 +93,4 @@ def money_cents_sql(expr: str, scale: int = 100) -> str:
     per-row half of the sum builders — for window frames and other
     contexts where the aggregate wraps the frame, not the expression).
     Valid in both Spark SQL and DuckDB."""
-    return f"cast(round(({expr}) * {scale}) as bigint)"
+    return f"cast({_round_sql(f'(({expr}) * {scale})')} as bigint)"

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from iceberg_examples_spark.catalog import LocalTable, load_table, scratch_dir
-from iceberg_examples_spark.functions.exact import money_sum_sql
+from iceberg_examples_spark.functions.exact import money_cents_sql, money_sum_sql
 
 
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,9 +307,9 @@ def incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     def agg_scaled(df: DataFrame) -> DataFrame:
         return df.groupBy("o_orderpriority").agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(
-                F.expr("cast(round(o_totalprice * 100) as bigint)")
-            ).alias("total_scaled"),
+            F.sum(F.expr(money_cents_sql("o_totalprice"))).alias(
+                "total_scaled"
+            ),
         )
 
     t.create(orders.filter(F.year("o_orderdate") < 1997))
@@ -512,7 +512,7 @@ def observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.expr(
                 "case when l_quantity < 30 then "
-                "cast(round(l_extendedprice * 100) as bigint) else 0 end"
+                f"{money_cents_sql('l_extendedprice')} else 0 end"
             )
         ).alias("kept_cents"),
     ).filter(F.col("l_quantity") < 30)
@@ -539,11 +539,11 @@ def sql_pipe_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("lineitem", "orders"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
-        """
+        f"""
         FROM lineitem
         |> WHERE l_shipdate >= DATE '1995-01-01'
         |> AGGREGATE count(*) AS n_items,
-                     sum(cast(round(l_extendedprice * 100) as bigint))
+                     sum({money_cents_sql("l_extendedprice")})
                        AS revenue_cents
            GROUP BY l_returnflag, l_linestatus
         |> WHERE n_items > 0
@@ -607,9 +607,7 @@ def union_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     old_extract = orders.filter(F.col("o_orderkey") % 3 == 0).select(
         "o_orderkey",
-        F.expr("cast(round(o_totalprice * 100) as bigint)").alias(
-            "price_cents"
-        ),
+        F.expr(money_cents_sql("o_totalprice")).alias("price_cents"),
     )
     new_extract = orders.filter(F.col("o_orderkey") % 3 == 1).select(
         "o_orderkey",
@@ -638,15 +636,11 @@ def merge_schema_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     gen0 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey",
-        F.expr("cast(round(o_totalprice * 100) as bigint)").alias(
-            "price_cents"
-        ),
+        F.expr(money_cents_sql("o_totalprice")).alias("price_cents"),
     )
     gen1 = orders.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey",
-        F.expr("cast(round(o_totalprice * 100) as bigint)").alias(
-            "price_cents"
-        ),
+        F.expr(money_cents_sql("o_totalprice")).alias("price_cents"),
         F.col("o_orderpriority").alias("priority"),
     )
     gen0.write.parquet(os.path.join(out, "gen=0"))
@@ -755,8 +749,7 @@ def nested_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         F.expr(
-            "cast(round(l_extendedprice * (1 - l_discount) * 10000) "
-            "as bigint)"
+            money_cents_sql("l_extendedprice * (1 - l_discount)", 10000)
         ).alias("rev_fp"),
     )
     orders = load_table(spark, sf_dir, "orders").select(

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from iceberg_examples_spark.catalog import load_table
-from iceberg_examples_spark.functions.exact import money_sum_sql
+from iceberg_examples_spark.functions.exact import money_cents_sql, money_sum_sql
 
 
 def dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,9 +336,7 @@ def trajectory_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "unix_micros(cast(ts as timestamp))"
             ).alias("us"),
-            F.expr(
-                f"cast(round(value * {TRAJ_SCALE}) as bigint)"
-            ).alias("v"),
+            F.expr(money_cents_sql("value", TRAJ_SCALE)).alias("v"),
         )
         .crossJoin(
             F.broadcast(
@@ -411,7 +409,7 @@ def rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
-        F.expr("cast(round(value * 100) as bigint)").alias("cents"),
+        F.expr(money_cents_sql("value")).alias("cents"),
     )
     day_us = 24 * 3600 * 1_000_000
     w = (

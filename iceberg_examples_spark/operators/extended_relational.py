@@ -152,7 +152,7 @@ def salted_agg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_examples_spark.functions.skew import salted_agg
 
     li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "qty_c", F.expr("cast(round(l_quantity * 100) as bigint)")
+        "qty_c", F.expr(money_cents_sql("l_quantity"))
     )
     out = salted_agg(
         li,
@@ -752,7 +752,7 @@ def skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = orders.select(
         "o_orderkey",
-        F.expr("cast(round(o_totalprice * 100) as bigint)").alias("cents"),
+        F.expr(money_cents_sql("o_totalprice")).alias("cents"),
         F.col("o_orderdate").alias("odate"),
     )
     # range buckets over the observed price span (two scalar bounds — a
@@ -805,11 +805,11 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions (the per-priority slices), never a global order."""
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
-        F.expr("cast(round(o_totalprice * 100) as bigint)")
+        F.expr(money_cents_sql("o_totalprice"))
     )
     return orders.select(
         "o_orderkey",
         "o_orderpriority",
-        F.expr("cast(round(o_totalprice * 100) as bigint)").alias("cents"),
+        F.expr(money_cents_sql("o_totalprice")).alias("cents"),
         F.percent_rank().over(w).alias("q"),
     )

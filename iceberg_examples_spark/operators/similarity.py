@@ -181,6 +181,10 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     e = "cast(embedding[{i}] as double)".format
     aggs = ["cast(count(1) as bigint) as n"]
+    # Plain ``round``, not functions/exact.py's fragment: the fragment
+    # names its operand 9 times, and over 128 aggregate columns the larger
+    # plan costs more than the per-row BigDecimal it saves on this small
+    # table (sf0.1: 2,000 rows; 1.1 -> 2.5-3.0 s per run when routed).
     aggs += [
         f"sum(cast(round({e(i=i)} * {EMB_SCALE}) as bigint)) as s{i}"
         for i in range(EMB_DIM)
@@ -221,12 +225,14 @@ def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pandas twin cannot.
 
     Exactness across engines AND across numpy: the per-element scaled
-    square round(x²·1e6) is computed as ``trunc(v + 0.5)`` (away-from-
-    zero for v ≥ 0 — np.round would banker's-round) into int64, then
-    summed — integer, order-independent, so numpy's SIMD/pairwise
-    summation cannot diverge from the oracle's left-fold."""
+    square round(x²·1e6) is computed by ``round_half_away_np`` (ties away
+    from zero like SQL ``round`` — np.round would banker's-round) into
+    int64, then summed — integer, order-independent, so numpy's
+    SIMD/pairwise summation cannot diverge from the oracle's left-fold."""
     import numpy as np
     import pyarrow as pa
+
+    from iceberg_examples_spark.functions.exact import round_half_away_np
 
     def kernel(batches):
         for batch in batches:
@@ -234,7 +240,7 @@ def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb = batch.column("embedding")
             flat = np.asarray(emb.flatten(), dtype=np.float64)
             arr = flat.reshape(n, EMB_DIM)
-            scaled = np.trunc(arr * arr * EMB_SCALE + 0.5).astype(np.int64)
+            scaled = round_half_away_np(arr * arr * EMB_SCALE).astype(np.int64)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(

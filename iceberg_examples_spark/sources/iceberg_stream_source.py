@@ -731,6 +731,7 @@ def _admission_scenario(spark, sf_dir: str, name: str, bulk: bool):
     from pyspark.sql import functions as F
 
     from iceberg_examples_spark.catalog import load_table, scratch_dir
+    from iceberg_examples_spark.functions.exact import money_cents_sql
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
@@ -817,9 +818,7 @@ def _admission_scenario(spark, sf_dir: str, name: str, bulk: bool):
         F.lit(len(counted)).cast("long").alias("n_batches"),
         F.count(F.lit(1)).alias("n_rows"),
         F.count_distinct("event_id").alias("n_distinct_ids"),
-        F.sum(F.expr("cast(round(value * 100) as bigint)")).alias(
-            "value_cents"
-        ),
+        F.sum(F.expr(money_cents_sql("value"))).alias("value_cents"),
         F.lit(bool(caught_up)).alias("caught_up"),
     )
 

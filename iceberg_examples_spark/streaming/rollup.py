@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_examples_spark.catalog import load_table
-from iceberg_examples_spark.functions.exact import money_sum_sql
+from iceberg_examples_spark.functions.exact import money_cents_sql, money_sum_sql
 
 _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 # One state partition per this many bytes of streaming input. Smaller than
@@ -636,9 +636,9 @@ def _fanout_commit(metrics_t, latest_t, batch_df: DataFrame, epoch_id: int) -> N
                 batch_df.groupBy("event_type")
                 .agg(
                     F.count(F.lit(1)).alias("n_events"),
-                    F.sum(
-                        F.expr("cast(round(value * 100) as bigint)")
-                    ).alias("value_cents"),
+                    F.sum(F.expr(money_cents_sql("value"))).alias(
+                        "value_cents"
+                    ),
                 )
                 .withColumn("epoch_id", F.lit(epoch_id).cast("bigint"))
             )
@@ -1067,8 +1067,6 @@ def stream_to_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sink.scan().agg(
         F.count(F.lit(1)).alias("n_clicks"),
         F.count_distinct("user_id").alias("n_users"),
-        F.expr(
-            "cast(sum(cast(round(value * 100) as bigint)) as double) / 100.0"
-        ).alias("total_value"),
+        F.expr(money_sum_sql("value", scale=100)).alias("total_value"),
         F.lit(delta).cast("int").alias("replay_delta"),
     )

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from iceberg_examples_spark.catalog import load_table
 from iceberg_examples_spark.checkpointing import spread
+from iceberg_examples_spark.functions.exact import money_cents_sql, round_half_up_np
 
 N_QUERIES = 5  # vec_id < 5 are the query vectors
 TOP_K = 3
@@ -174,24 +175,20 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide-expression plans, ship strings, not object graphs.
 
     Cross-engine exactness: float sums are shuffle-order-dependent, so
-    each element is scaled to BIGINT per row (round(x·1e6), and
-    round(x²·1e6) from one deterministic double multiply) and accumulated
-    exactly; ``mean`` is one trailing double division off the exact sum —
-    the functions/exact.py discipline applied elementwise."""
+    each element is scaled to BIGINT per row by functions/exact.py's
+    ``money_cents_sql`` (round(x·1e6), and round(x²·1e6) from one
+    deterministic double multiply) and accumulated exactly; ``mean`` is
+    one trailing double division off the exact sum — the
+    functions/exact.py discipline applied elementwise."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = "cast(embedding[{i}] as double)".format
     aggs = ["cast(count(1) as bigint) as n"]
-    # Plain ``round``, not functions/exact.py's fragment: the fragment
-    # names its operand 9 times, and over 128 aggregate columns the larger
-    # plan costs more than the per-row BigDecimal it saves on this small
-    # table (sf0.1: 2,000 rows; 1.1 -> 2.5-3.0 s per run when routed).
     aggs += [
-        f"sum(cast(round({e(i=i)} * {EMB_SCALE}) as bigint)) as s{i}"
+        f"sum({money_cents_sql(e(i=i), EMB_SCALE)}) as s{i}"
         for i in range(EMB_DIM)
     ]
     aggs += [
-        f"sum(cast(round({e(i=i)} * {e(i=i)} * {EMB_SCALE}) as bigint))"
-        f" as q{i}"
+        f"sum({money_cents_sql(f'{e(i=i)} * {e(i=i)}', EMB_SCALE)}) as q{i}"
         for i in range(EMB_DIM)
     ]
     arr = ",".join(
@@ -225,14 +222,12 @@ def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pandas twin cannot.
 
     Exactness across engines AND across numpy: the per-element scaled
-    square round(x²·1e6) is computed by ``round_half_away_np`` (ties away
-    from zero like SQL ``round`` — np.round would banker's-round) into
-    int64, then summed — integer, order-independent, so numpy's
+    square round(x²·1e6) is computed by ``round_half_up_np`` (ties up, like
+    SQL ``round`` on a non-negative value; np.round would banker's-round)
+    into int64, then summed — integer, order-independent, so numpy's
     SIMD/pairwise summation cannot diverge from the oracle's left-fold."""
     import numpy as np
     import pyarrow as pa
-
-    from iceberg_examples_spark.functions.exact import round_half_away_np
 
     def kernel(batches):
         for batch in batches:
@@ -240,7 +235,7 @@ def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb = batch.column("embedding")
             flat = np.asarray(emb.flatten(), dtype=np.float64)
             arr = flat.reshape(n, EMB_DIM)
-            scaled = round_half_away_np(arr * arr * EMB_SCALE).astype(np.int64)
+            scaled = round_half_up_np(arr * arr * EMB_SCALE).astype(np.int64)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(

@@ -191,8 +191,8 @@ HEADLINE = [
     "iceberg_table_statistics",
     "object_store_listing",
     "stream_admission_control",
-    # round-12: the bulk-reader admission twin (admission_channel) and
-    # incremental NDV via theta-sketch union
+    # round-12: the second admission scenario and incremental NDV via
+    # theta-sketch union
     "stream_admission_bulk",
     "iceberg_stats_union",
     "iceberg_default_values",

@@ -125,18 +125,41 @@ def scratch_root() -> str:
     return tempfile.gettempdir()
 
 
+_scratch_paths: set[str] = set()
+_scratch_hook_pid: int | None = None
+
+
+def _remove_scratch_dirs() -> None:
+    """atexit hook: remove the scratch dirs THIS process named. A forked
+    child inherits the hook and the set; the pid suffix keeps it from
+    removing its parent's dirs."""
+    import shutil
+
+    suffix = f"_{os.getpid()}"
+    for path in _scratch_paths:
+        if path.endswith(suffix):
+            shutil.rmtree(path, ignore_errors=True)
+
+
 def scratch_dir(sf_dir: str, name: str, fresh: bool = False) -> str:
     """Per-process scratch path for query-internal writes:
     ``<scratch_root>/ies_<name>_<sf-tag>_<pid>``. The pid suffix isolates
     concurrent processes (bench + pytest racing on one path would rmtree
     snapshots out from under each other's lazy jobs); ``fresh`` clears
-    leftovers from a previous run of THIS pid."""
+    leftovers from a previous run of THIS pid. The process removes every
+    path it named here when it exits (the default root is RAM-backed)."""
+    import atexit
     import shutil
 
+    global _scratch_hook_pid
     tag = os.path.basename(os.path.normpath(sf_dir))
     path = f"{scratch_root()}/ies_{name}_{tag}_{os.getpid()}"
     if fresh:
         shutil.rmtree(path, ignore_errors=True)
+    if _scratch_hook_pid != os.getpid():
+        atexit.register(_remove_scratch_dirs)
+        _scratch_hook_pid = os.getpid()
+    _scratch_paths.add(path)
     return path
 
 

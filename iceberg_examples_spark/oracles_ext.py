@@ -3768,10 +3768,8 @@ SELECT CAST(2 AS BIGINT) AS n_batches,
 FROM events WHERE event_type IN ('click', 'purchase', 'view')
 """
 
-# stream_admission_bulk: the executor-parallel twin — identical
-# arithmetic THROUGH the bulk reader + admission_channel (the side-
-# channel is what makes its first batch bound exactly); any divergence
-# from the simple flavor's numbers isolates a bulk-path admission bug.
+# stream_admission_bulk: stream_admission_control's scenario under its
+# own name — the same reader and arithmetic, so the same numbers.
 EXT_ORACLES["stream_admission_bulk"] = """
 SELECT CAST(2 AS BIGINT) AS n_batches,
        count(*) AS n_rows,

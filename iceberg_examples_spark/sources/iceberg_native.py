@@ -983,8 +983,7 @@ class IcebergNativeTable:
 
     # MOR delete sides below this estimated in-memory size get an
     # explicit broadcast hint (see _broadcast_if_small)
-    BROADCAST_DELETES_KEY = "spark.iceberg_examples.broadcastDeleteBytes"
-    BROADCAST_DELETES_DEFAULT = 64 << 20  # 64 MiB
+    BROADCAST_DELETES_BYTES = 64 << 20  # 64 MiB
 
     def _broadcast_if_small(
         self, dels: DataFrame, entries: list[dict]
@@ -1001,21 +1000,12 @@ class IcebergNativeTable:
         delete file's ``record_count``, and the decoded coordinate /
         equality row is a ~100-byte tuple, so ``rows * 128`` bounds the
         built-relation size regardless of how well the bitmaps or
-        parquet pages compressed. Below the (conf-tunable) bound the
-        delete side is hinted broadcast and every MOR anti-join becomes
-        a BroadcastHashJoin — the 100 TB data side is never shuffled to
+        parquet pages compressed. Below the bound the delete side is
+        hinted broadcast and every MOR anti-join becomes a
+        BroadcastHashJoin — the 100 TB data side is never shuffled to
         apply KB-scale delete debt. Above the bound (a genuinely huge
         uncompacted delete load) the hint is withheld and Spark keeps
         the shuffle plan, which is the right call at that size."""
-        try:
-            limit = int(
-                self.spark.conf.get(
-                    self.BROADCAST_DELETES_KEY,
-                    str(self.BROADCAST_DELETES_DEFAULT),
-                )
-            )
-        except Exception:
-            limit = self.BROADCAST_DELETES_DEFAULT
         # a manifest entry with no record_count is UNKNOWN size, not
         # zero rows — counting it as 0 would bias toward broadcasting a
         # delete relation of unbounded size (ADVICE r12): withhold the
@@ -1023,7 +1013,8 @@ class IcebergNativeTable:
         if any(d.get("record_count") is None for d in entries):
             return dels
         est = sum(int(d["record_count"]) for d in entries) * 128
-        return F.broadcast(dels) if est <= limit else dels
+        small = est <= self.BROADCAST_DELETES_BYTES
+        return F.broadcast(dels) if small else dels
 
     @staticmethod
     def _require_seq(df: DataFrame, seq_col: str, path_col: str) -> DataFrame:
@@ -1207,7 +1198,9 @@ class IcebergNativeTable:
         column is only resolvable on the raw file relation, so once a
         scan carries MOR anti-joins it cannot be re-derived downstream;
         exposing it here is the supported path (the lifecycle property
-        test falsified the derive-it-later approach).
+        test falsified the derive-it-later approach). A schema column
+        named ``file_path`` or ``pos`` raises ``ValueError``: the
+        coordinates would overwrite it.
 
         ``partition_filter`` prunes on PARTITION FIELD values directly;
         ``where`` is the friendlier form — equality literals on SOURCE
@@ -1298,6 +1291,15 @@ class IcebergNativeTable:
                 (s for s in meta["schemas"] if s["schema-id"] == sid),
                 self._current_schema(meta),
             )
+        if with_coordinates:
+            for f in cur_sch["fields"]:
+                if f["name"] in ("file_path", "pos"):
+                    raise ValueError(
+                        f"column {f['name']!r} collides with the "
+                        "position-delete coordinate of the same name; "
+                        "rename it before a coordinate scan (merge-on-"
+                        "read deletes and the change feed need one)"
+                    )
 
         def residual(frame: DataFrame) -> DataFrame:
             # the row-level twin of the pruning predicate (Iceberg's
@@ -3771,22 +3773,24 @@ class IcebergNativeTable:
                 if s["snapshot-id"] not in plans:
                     plans[s["snapshot-id"]] = self._plan(s["snapshot-id"])
         pair_info: list[tuple] = []
-        all_pq_new: list[str] = []
+        all_pq_scope: list[str] = []
         for prev_s, cur_s in pairs:
             _, _, pdata, ppos, peq = plans[prev_s["snapshot-id"]]
             _, _, cdata, cpos, ceq = plans[cur_s["snapshot-id"]]
             prev_paths = {d["path"] for d in pdata}
             cur_paths = {d["path"] for d in cdata}
             new_eq = {d["path"] for d in ceq} - {d["path"] for d in peq}
-            new_pos = [
-                d
-                for d in cpos
-                if d["path"] not in {x["path"] for x in ppos}
-            ]
+            prev_pos = {d["path"] for d in ppos}
+            cur_pos = {d["path"] for d in cpos}
+            new_pos = [d for d in cpos if d["path"] not in prev_pos]
+            # delete files this commit dropped: their rows may live
+            # again, so their targets join the diff's scope and no fast
+            # path applies (superseded DVs and COW rewrites included)
+            gone_pos = [d for d in ppos if d["path"] not in cur_pos]
             if new_eq:
                 # equality-delete fallback: full-state diff (an
                 # equality delete can kill rows in any earlier file)
-                pair_info.append((prev_s, cur_s, None, [], set(), set(), []))
+                pair_info.append((prev_s, cur_s, None, [], set(), False, []))
                 continue
             added = cur_paths - prev_paths
             removed = prev_paths - cur_paths
@@ -3798,7 +3802,7 @@ class IcebergNativeTable:
             # MANIFEST — no file read at all
             dv_refs = {
                 d["referenced_data_file"]
-                for d in new_pos
+                for d in new_pos + gone_pos
                 if d.get("file_format") == "PUFFIN"
             }
             affected |= {uri2path[r] for r in dv_refs if r in uri2path}
@@ -3807,10 +3811,15 @@ class IcebergNativeTable:
                 for d in new_pos
                 if d.get("file_format") != "PUFFIN"
             ]
-            all_pq_new.extend(pq_new)
+            pq_scope = pq_new + [
+                d["path"]
+                for d in gone_pos
+                if d.get("file_format") != "PUFFIN"
+            ]
+            all_pq_scope.extend(pq_scope)
             pair_info.append(
-                (prev_s, cur_s, (affected, uri2path), pq_new,
-                 added, removed, new_pos)
+                (prev_s, cur_s, (affected, uri2path, pq_scope), pq_new,
+                 added, not removed and not gone_pos, new_pos)
             )
         # ---- pass 2: ONE batched Spark job resolves every parquet
         # position-delete file's distinct targets across the WHOLE
@@ -3831,10 +3840,10 @@ class IcebergNativeTable:
             return p
 
         targets_by_src: dict[str, set[str]] = {}
-        if all_pq_new:
+        if all_pq_scope:
             for r in (
                 self.spark.read.schema("file_path string, pos long")
-                .parquet(*sorted(set(all_pq_new)))
+                .parquet(*sorted(set(all_pq_scope)))
                 .select(
                     F.input_file_name().alias("_src"), "file_path"
                 )
@@ -3845,13 +3854,13 @@ class IcebergNativeTable:
                     _norm_local(r["_src"]), set()
                 ).add(r["file_path"])
         # ---- pass 3: assemble the single unioned lazy plan
-        for prev_s, cur_s, scope, pq_new, added, removed, new_pos in (
+        for prev_s, cur_s, scope, pq_new, added, kept, new_pos in (
             pair_info
         ):
             files = None  # None = unrestricted (equality fallback)
             if scope is not None:
-                affected, uri2path = scope
-                for p in pq_new:
+                affected, uri2path, pq_scope = scope
+                for p in pq_scope:
                     affected |= {
                         uri2path[t]
                         for t in targets_by_src.get(_norm_local(p), ())
@@ -3871,13 +3880,15 @@ class IcebergNativeTable:
             # the rows its new delete entries kill (DeletedRowsScanTask):
             # prev's live view semi-joined on the new delete
             # coordinates — previously-dead rows are absent from the
-            # prev view, so stacked v2 coordinates and superseding v3
-            # DVs (whose new bitmap contains the old) both reduce to
-            # the newly-killed rows, the same multiset the diff nets
-            # out. COW/overwrite commits (data files added AND removed)
-            # keep the general diff. Guide §2.4: the cheapest shuffle
+            # prev view, so stacked v2 coordinates reduce to the
+            # newly-killed rows, the same multiset the diff nets out.
+            # Both shapes hold only while every previous file, data or
+            # delete, is still live (``kept``): COW/overwrite commits
+            # (data files added AND removed) and commits that drop a
+            # delete file (a superseded v3 DV, a resurrection) keep
+            # the general diff. Guide §2.4: the cheapest shuffle
             # is the one the metadata proves unnecessary.
-            if scope is not None and added and not removed and not new_pos:
+            if scope is not None and added and kept and not new_pos:
                 chunk = (
                     self.scan(
                         snapshot_id=cur_s["snapshot-id"],
@@ -3893,7 +3904,7 @@ class IcebergNativeTable:
                 )
                 out = chunk if out is None else out.unionByName(chunk)
                 continue
-            if scope is not None and new_pos and not added and not removed:
+            if scope is not None and new_pos and not added and kept:
                 prev_view = self.scan(
                     snapshot_id=prev_s["snapshot-id"],
                     files=files,

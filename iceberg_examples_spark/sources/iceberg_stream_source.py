@@ -10,19 +10,14 @@ lineage — so the checkpoint alone pins what has been emitted; a second
 ``availableNow`` run on the same checkpoint consumes only snapshots
 committed since.
 
-Two reader flavors share one planning routine (each micro-batch is
-PLANNED from kilobyte-scale metadata — metadata.json + Avro manifests,
-read by ``IcebergNativeTable``'s own metadata methods on a session-less
-handle; no SparkSession in the read path):
-
-- ``icebergnative_stream`` — ``SimpleDataSourceStreamReader``, decode
-  on the driver: the control-plane demo of the API, right when batches
-  are small.
-- ``icebergnative_stream_bulk`` — ``DataSourceStreamReader``: every
-  planned data file becomes an ``InputPartition`` decoded by an
-  EXECUTOR task, so an N-file micro-batch reads N-way parallel — the
-  100 TB ingest shape. Offsets and snapshot rules are identical; the
-  flavors are interchangeable on one checkpoint lineage.
+One reader, ``IcebergStreamReader`` (a ``DataSourceStreamReader``
+behind the ``icebergnative_stream`` format). The driver PLANS each
+micro-batch from kilobyte-scale metadata — metadata.json + Avro
+manifests, read by ``IcebergNativeTable``'s own metadata methods on a
+session-less handle; no SparkSession in the read path — and every
+planned data file becomes an ``InputPartition`` that an EXECUTOR task
+decodes into Arrow record batches, so an N-file micro-batch reads
+N-way parallel.
 
 Semantics mirror Iceberg's Spark streaming read: APPEND snapshots are
 consumed; REPLACE snapshots (compaction, position-delete rewrites) are
@@ -40,17 +35,13 @@ micro-batch admits at most N files past the consumed position — the
 maxFilesPerTrigger pattern, implemented SOURCE-side because the Python
 DataSource API has no engine-pushed ReadLimit. Mid-snapshot replay is
 exact: file order within a snapshot is manifest order, immutable once
-committed. The simple reader bounds exactly (its read() receives the
-checkpointed start); the bulk reader ratchets a driver-side floor
-from partitions(), so without further help the FIRST micro-batch of
-each run is unbounded (the engine's first call is latestOffset with no
-floor — bounding blind would regress offsets after a restart) and
-every later one is bounded. ``option("admission_channel", <path>)``
-closes the first-batch gap on the bulk reader: planned positions are
-ratcheted into a side-channel file (atomic, monotone) and a fresh
-run's first latestOffset bounds from that persisted floor — making
-``max_files_per_microbatch`` exact on BOTH flavors while the engine's
-checkpoint alone still owns exactly-once.
+committed. The bound is exact on every micro-batch, the first of a
+restarted run included, because the engine's offset log owns progress
+and tells the reader where it stands: a restarted query hands the
+reader its last planned offset as ``partitions(last, last)`` before the
+first ``latestOffset`` (``PythonMicroBatchStream`` implements
+``AcceptsLatestSeenOffset``), while a fresh query calls ``latestOffset``
+with nothing seen — so a reader with no floor is at the initial offset.
 """
 
 from __future__ import annotations
@@ -62,7 +53,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 from iceberg_examples_spark.sources.iceberg_native import (
@@ -111,7 +101,7 @@ def _seq_plans(
 ) -> list[tuple[int, list[str]]]:
     """Ordered ``[(sequence-number, [data file paths])]`` for snapshots
     with sequence number > ``after_seq`` — the one planning routine
-    both reader flavors and both admission modes share. REPLACE
+    bounded and unbounded micro-batches share. REPLACE
     snapshots (compaction / delete rewrites) contribute an EMPTY list
     (logically neutral, but offsets must still advance across them);
     DELETE/OVERWRITE snapshots raise unless ``skip_non_appends`` (a
@@ -263,77 +253,6 @@ def _offset_of_pos(pos: tuple[int, float]) -> dict:
     return {"seq": seq} if k == float("inf") else {"seq": seq, "nfiles": int(k)}
 
 
-class IcebergStreamReader(SimpleDataSourceStreamReader):
-    def __init__(
-        self,
-        location: str,
-        skip_non_appends: bool,
-        max_files: int | None = None,
-    ):
-        self.location = location
-        self.skip_non_appends = skip_non_appends
-        self.max_files = max_files
-
-    def initialOffset(self) -> dict:
-        return {"seq": 0}
-
-    def read(self, start: dict):
-        """``max_files_per_microbatch`` admission is EXACT here even
-        across restarts: the simple API hands read() the checkpointed
-        start position, so each micro-batch admits at most N files past
-        it and returns the matching (possibly mid-snapshot) offset."""
-        meta = _read_meta(self.location)
-        chain = _lineage(meta)
-        if self.max_files:
-            end = _advance_position(
-                chain, _pos(start), self.max_files, self.skip_non_appends
-            )
-        else:
-            latest = chain[-1]["sequence-number"] if chain else 0
-            end = {"seq": latest}
-        rows = self._rows_between(meta, chain, start, end)
-        return iter(rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # deterministic replay for recovery: same planning, pinned end
-        meta = _read_meta(self.location)
-        chain = _lineage(meta)
-        return iter(self._rows_between(meta, chain, start, end))
-
-    # -- planning + decode (pure Python, metadata-driven) ---------------
-
-    def _rows_between(
-        self, meta: dict, chain: list[dict], start: dict, end: dict
-    ) -> list[tuple]:
-        cur = IcebergNativeTable._current_schema(meta)
-        names = [f["name"] for f in cur["fields"]]
-        out: list[tuple] = []
-        for path in _files_between_positions(
-            chain, start, end, self.skip_non_appends
-        ):
-            out.extend(_decode_file(path, names))
-        return out
-
-
-def _decode_file(path: str, names: list[str]):
-    """Decode one data file to row tuples with name-based projection and
-    null-fill (appends under an older schema lack later columns).
-    COLUMNAR: each projected column converts to Python in one
-    ``to_pylist`` call and rows come from ``zip`` — ~3x faster than the
-    former per-row dict decode (0.20 s vs 0.60 s for a 100k-row file,
-    r12 measurement), which matters on the driver-serial simple-reader
-    path."""
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(path)
-    have = set(t.column_names)
-    cols = [
-        t.column(n).to_pylist() if n in have else [None] * t.num_rows
-        for n in names
-    ]
-    yield from zip(*cols)
-
-
 def _decode_file_batches(path: str, arrow_schema):
     """Decode one data file straight to Arrow RecordBatches matching the
     source's declared schema (projection by name, null-fill for columns
@@ -359,133 +278,70 @@ def _decode_file_batches(path: str, arrow_schema):
 
 class IcebergFileSplit(InputPartition):
     """One data file of one micro-batch — the split `partitions()` hands
-    an executor task (picklable: path + projection, plus the Arrow
-    schema when the task should yield RecordBatches directly)."""
+    an executor task (picklable: the path and the Arrow read schema)."""
 
-    def __init__(self, path: str, names: list[str], arrow_schema=None):
+    def __init__(self, path: str, arrow_schema):
         self.path = path
-        self.names = names
         self.arrow_schema = arrow_schema
 
 
-class IcebergBulkStreamReader(DataSourceStreamReader):
-    """The executor-parallel flavor (``DataSourceStreamReader``): the
-    driver still PLANS each micro-batch from kilobyte metadata —
+class IcebergStreamReader(DataSourceStreamReader):
+    """The driver PLANS each micro-batch from kilobyte metadata —
     ``latestOffset`` reads metadata.json, ``partitions(start, end)``
-    walks the Avro manifests — but every planned data file becomes an
+    walks the Avro manifests — and every planned data file becomes an
     ``InputPartition`` DECODED BY AN EXECUTOR TASK, so a micro-batch of
-    N files reads with N-way parallelism instead of serially on the
-    driver. Same offsets ({"seq": N}), same skip/raise snapshot rules,
-    same checkpoint semantics as the simple reader — the two flavors
-    are interchangeable on one checkpoint lineage."""
+    N files reads with N-way parallelism."""
 
     def __init__(
         self,
         location: str,
         skip_non_appends: bool,
-        names: list[str],
+        arrow_schema,
         max_files: int | None = None,
-        admission_channel: str | None = None,
-        arrow_schema=None,
     ):
         self.location = location
         self.skip_non_appends = skip_non_appends
-        self.names = names
-        self.max_files = max_files
-        self.admission_channel = admission_channel
         self.arrow_schema = arrow_schema
-        # consumed position this reader has OBSERVED (seq, files),
-        # ratcheted by partitions(); latestOffset bounds its advance
-        # from here. The engine's FIRST call each run is latestOffset
-        # with no prior initialOffset/partitions (verified against the
-        # pyspark runner), and bounding from an unknown floor would
-        # regress offsets after a restart (duplicates) — so WITHOUT a
-        # side-channel the first micro-batch of every run is UNBOUNDED
-        # (correct, just big) and each later one is admission-
-        # controlled. ``option("admission_channel", <file path>)``
-        # closes that gap: every planned position is ratcheted (max,
-        # atomic os.replace) into the channel file, and a fresh run's
-        # first latestOffset bounds from the persisted floor — the
-        # engine's own checkpoint still owns exactly-once (the channel
-        # only ever AHEAD of or equal to the write-ahead offset log, so
-        # a crash between plan and commit merely makes one batch
-        # smaller than the bound, never a duplicate or a drop). The
-        # simple reader's admission is exact without any of this (its
-        # read() receives the checkpointed start).
+        self.max_files = max_files
+        # the consumed position (seq, files) the engine has shown this
+        # reader, ratcheted by partitions(); latestOffset admits at most
+        # max_files past it. A restarted query calls partitions(last,
+        # last) before its first latestOffset, a fresh query calls
+        # latestOffset first — so None means the initial offset.
         self._last: tuple[int, float] | None = None
 
-    def _channel_floor(self) -> tuple[int, float] | None:
-        if not self.admission_channel:
-            return None
-        try:
-            with open(self.admission_channel) as f:
-                return _pos(json.load(f))
-        except (OSError, ValueError, KeyError, json.JSONDecodeError):
-            return None
-
-    def _channel_ratchet(self, pos: tuple[int, float]) -> None:
-        """Persist ``max(channel, pos)`` atomically (plain JSON offset
-        dict). Best-effort: an unwritable channel degrades to the
-        unbounded-first-batch behavior, never breaks the stream."""
-        if not self.admission_channel:
-            return
-        cur = self._channel_floor()
-        if cur is not None and cur >= pos:
-            return
-        try:
-            tmp = self.admission_channel + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(_offset_of_pos(pos), f)
-            os.replace(tmp, self.admission_channel)
-        except OSError:
-            pass
-
     def initialOffset(self) -> dict:
-        self._last = (0, float("inf"))
         return {"seq": 0}
 
     def latestOffset(self) -> dict:
-        meta = _read_meta(self.location)
-        chain = _lineage(meta)
-        floor = self._last
-        if floor is None:
-            floor = self._channel_floor()
-        if self.max_files and floor is not None:
+        chain = _lineage(_read_meta(self.location))
+        if self.max_files:
+            floor = self._last or _pos(self.initialOffset())
             off = _advance_position(
                 chain, floor, self.max_files, self.skip_non_appends
             )
         else:
             off = {"seq": chain[-1]["sequence-number"] if chain else 0}
         self._last = _pos(off)
-        self._channel_ratchet(self._last)
         return off
 
     def partitions(self, start: dict, end: dict):
-        meta = _read_meta(self.location)
-        chain = _lineage(meta)
+        chain = _lineage(_read_meta(self.location))
         paths = _files_between_positions(
             chain, start, end, self.skip_non_appends
         )
         if self._last is None or _pos(end) > self._last:
             self._last = _pos(end)
-        self._channel_ratchet(_pos(end))
         # an empty batch still needs one (empty) split: Spark requires
         # at least one partition per planned micro-batch
-        if not paths:
-            return [IcebergFileSplit("", self.names)]
         return [
-            IcebergFileSplit(p, self.names, self.arrow_schema)
-            for p in paths
+            IcebergFileSplit(p, self.arrow_schema) for p in paths or [""]
         ]
 
     def read(self, partition: IcebergFileSplit):
         if not partition.path:
             return iter(())
-        if partition.arrow_schema is not None:
-            return _decode_file_batches(
-                partition.path, partition.arrow_schema
-            )
-        return _decode_file(partition.path, partition.names)
+        return _decode_file_batches(partition.path, partition.arrow_schema)
 
     def commit(self, end: dict) -> None:
         pass  # checkpoint-managed; nothing table-side to release
@@ -502,45 +358,28 @@ class IcebergNativeStreamSource(DataSource):
     def schema(self) -> str:
         return IcebergNativeTable._schema_ddl(_read_meta(self.options["path"]))
 
-    def simpleStreamReader(self, schema) -> IcebergStreamReader:
+    def streamReader(self, schema) -> IcebergStreamReader:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        # the engine's resolved read schema, as Arrow: tasks yield
+        # RecordBatches the worker forwards to the JVM unconverted
         return IcebergStreamReader(
             self.options["path"],
             self.options.get("skip_non_appends", "false").lower() == "true",
+            to_arrow_schema(schema),
             max_files=_parse_max_files(self.options),
         )
 
 
-class IcebergNativeBulkStreamSource(DataSource):
-    """``spark.readStream.format("icebergnative_stream_bulk")`` — the
-    executor-parallel variant: identical offsets and snapshot rules,
-    file decode fanned out to tasks via ``partitions()``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "icebergnative_stream_bulk"
-
-    def schema(self) -> str:
-        return IcebergNativeTable._schema_ddl(_read_meta(self.options["path"]))
-
-    def streamReader(self, schema) -> IcebergBulkStreamReader:
-        cur = IcebergNativeTable._current_schema(_read_meta(self.options["path"]))
-        # the engine's resolved read schema, as Arrow: tasks yield
-        # RecordBatches directly instead of per-row tuples (the worker
-        # forwards them to the JVM without conversion)
-        try:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            arrow_schema = to_arrow_schema(schema)
-        except Exception:
-            arrow_schema = None  # tuple fallback keeps the read correct
-        return IcebergBulkStreamReader(
-            self.options["path"],
-            self.options.get("skip_non_appends", "false").lower() == "true",
-            [f["name"] for f in cur["fields"]],
-            max_files=_parse_max_files(self.options),
-            admission_channel=self.options.get("admission_channel"),
-            arrow_schema=arrow_schema,
-        )
+def _register(spark) -> None:
+    """Register the source with ``spark``. Only an already-registered
+    name is benign; a real registration failure must propagate NOW, not
+    resurface later as a baffling "format not found" from readStream."""
+    try:
+        spark.dataSource.register(IcebergNativeStreamSource)
+    except Exception as e:
+        if "already" not in str(e).lower():
+            raise
 
 
 def stream_from_iceberg(spark, sf_dir: str):
@@ -567,14 +406,7 @@ def stream_from_iceberg(spark, sf_dir: str):
         ev.filter(F.col("event_type") == "click"),
     )
     src.append(ev.filter(F.col("event_type") == "purchase"))
-    try:
-        spark.dataSource.register(IcebergNativeStreamSource)
-    except Exception as e:
-        # only an already-registered name is benign; a real registration
-        # failure must propagate NOW, not resurface later as a baffling
-        # "format not found" from readStream
-        if "already" not in str(e).lower():
-            raise
+    _register(spark)
     out = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
     # ONE load() for both drains: resolving a Python DataSource plans
@@ -617,8 +449,8 @@ def stream_from_iceberg(spark, sf_dir: str):
 
 
 def stream_from_iceberg_bulk(spark, sf_dir: str):
-    """Declared query: the EXECUTOR-PARALLEL streaming read. The table
-    is written with pinned file counts (3 click files, then 2 purchase
+    """Declared query: the split shape of the executor-parallel
+    streaming read. The table is written with pinned file counts (3 click files, then 2 purchase
     files, then 2 view files), so the split counts the batches report
     are deterministic: run 1 plans 5 files -> 5 input partitions (one
     executor task each), run 2 — after a MOR DELETE that
@@ -642,14 +474,7 @@ def stream_from_iceberg_bulk(spark, sf_dir: str):
         ev.filter(F.col("event_type") == "click").repartition(3),
     )
     src.append(ev.filter(F.col("event_type") == "purchase").repartition(2))
-    try:
-        spark.dataSource.register(IcebergNativeBulkStreamSource)
-    except Exception as e:
-        # only an already-registered name is benign; a real registration
-        # failure must propagate NOW, not resurface later as a baffling
-        # "format not found" from readStream
-        if "already" not in str(e).lower():
-            raise
+    _register(spark)
     out = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
     splits: list[int] = []
@@ -663,7 +488,7 @@ def stream_from_iceberg_bulk(spark, sf_dir: str):
     # plan carries only the options (path), so the second run's reader
     # still reads the post-delete metadata at its own latestOffset time
     stream_df = (
-        spark.readStream.format("icebergnative_stream_bulk")
+        spark.readStream.format("icebergnative_stream")
         .option("path", src.location)
         .option("skip_non_appends", "true")
         .load()
@@ -715,17 +540,16 @@ def _last_committed_offset(ckpt: str) -> dict | None:
     return json.loads(lines[-1])
 
 
-def _admission_scenario(spark, sf_dir: str, name: str, bulk: bool):
+def _admission_scenario(spark, sf_dir: str, name: str):
     """Shared body of the two admission declared queries: PINNED file
     counts (4 + 2 = 6 data files across two append commits), a
     3-files-per-micro-batch bound, exactly two availableNow drains
     (batch 2 crosses the commit boundary mid-snapshot: 1 file of
     commit 1 + 2 of commit 2), and a caught-up proof read from the
     checkpoint's committed offset vs the table tip (kilobyte metadata,
-    NOT a third streaming session). The bulk flavor seeds an
-    ``admission_channel`` file the way an operator provisions one, so
-    the executor-parallel reader's first batch of every run bounds
-    exactly like the simple reader's."""
+    NOT a third streaming session). Drain 2 is a restarted query, so
+    its bound rests on the engine handing the reader the checkpointed
+    offset before the first latestOffset."""
     import os as _os
 
     from pyspark.sql import functions as F
@@ -747,20 +571,9 @@ def _admission_scenario(spark, sf_dir: str, name: str, bulk: bool):
             F.col("event_type").isin("purchase", "view")
         ).repartition(2)
     )
-    source = (
-        IcebergNativeBulkStreamSource if bulk else IcebergNativeStreamSource
-    )
-    try:
-        spark.dataSource.register(source)
-    except Exception as e:
-        if "already" not in str(e).lower():
-            raise
+    _register(spark)
     out = _os.path.join(root, "out")
     ckpt = _os.path.join(root, "ckpt")
-    channel = _os.path.join(root, "admission.offset")
-    if bulk:
-        with open(channel, "w") as f:
-            json.dump({"seq": 0}, f)
     counted: set[int] = set()
 
     def sink(b, _epoch) -> None:
@@ -786,14 +599,12 @@ def _admission_scenario(spark, sf_dir: str, name: str, bulk: bool):
             counted.add(_epoch)
 
     # one load() shared by both drains (the plan worker is per load())
-    reader = (
-        spark.readStream.format(source.name())
+    stream_df = (
+        spark.readStream.format("icebergnative_stream")
         .option("path", src.location)
         .option("max_files_per_microbatch", "3")
+        .load()
     )
-    if bulk:
-        reader = reader.option("admission_channel", channel)
-    stream_df = reader.load()
 
     def drain() -> None:
         q = (
@@ -824,30 +635,18 @@ def _admission_scenario(spark, sf_dir: str, name: str, bulk: bool):
 
 
 def stream_admission_control(spark, sf_dir: str):
-    """Declared query: ``max_files_per_microbatch`` back-pressure on
-    the SIMPLE reader (admission exact by construction: read() gets
-    the checkpointed start). Pinned arithmetic: ceil(6/3) = 2
-    micro-batches, every source row exactly once, caught_up proven
-    from the checkpoint logs. An admission bug shows up as the wrong
-    batch count (bound ignored -> 1, off-by-one in the mid-snapshot
-    offset -> 3+), a replayed or dropped file as a row-count/hash
-    mismatch, a short drain as caught_up=false."""
-    return _admission_scenario(
-        spark, sf_dir, "stream_admission_control", bulk=False
-    )
+    """Declared query: ``max_files_per_microbatch`` back-pressure.
+    Pinned arithmetic: ceil(6/3) = 2 micro-batches, every source row
+    exactly once, caught_up proven from the checkpoint logs. An
+    admission bug shows up as the wrong batch count (bound ignored ->
+    1, off-by-one in the mid-snapshot offset -> 3+), a replayed or
+    dropped file as a row-count/hash mismatch, a short drain as
+    caught_up=false."""
+    return _admission_scenario(spark, sf_dir, "stream_admission_control")
 
 
 def stream_admission_bulk(spark, sf_dir: str):
-    """Declared query: the BULK (executor-parallel) twin of
-    stream_admission_control — same pinned 6-file/bound-3 arithmetic,
-    same caught-up proof, through ``icebergnative_stream_bulk`` with a
-    seeded ``admission_channel``: the side-channel floor is what makes
-    the first micro-batch of every run bound exactly (without it the
-    engine's floorless first latestOffset must stay unbounded to avoid
-    offset regression). Identical output to the simple flavor — the
-    two readers are interchangeable on one checkpoint lineage — so any
-    divergence in batch count, rows, or caught_up isolates a bulk-path
-    admission bug."""
-    return _admission_scenario(
-        spark, sf_dir, "stream_admission_bulk", bulk=True
-    )
+    """Declared query: stream_admission_control's scenario under its
+    own name and scratch directory — same pinned 6-file/bound-3
+    arithmetic, same caught-up proof, same oracle numbers."""
+    return _admission_scenario(spark, sf_dir, "stream_admission_bulk")

@@ -1689,57 +1689,21 @@ def test_branch_writes_and_fast_forward_wap(spark, tmp_path):
         t.fast_forward("main", "audit")
 
 
-def test_streaming_source_offsets_and_skip_rules(spark, tmp_path):
-    """The streaming source's reader contract, driven directly (no
-    streaming engine): initial offset 0 consumes the whole lineage;
-    the returned offset resumes exactly (no re-emission); a REPLACE
-    snapshot is skipped; a delete commit raises unless
-    skip_non_appends; readBetweenOffsets replays a pinned range
-    deterministically."""
-    from iceberg_examples_spark.sources.iceberg_stream_source import (
-        IcebergStreamReader,
-    )
-
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(10)], "k long, v double"
-    )
-    t = IcebergNativeTable.create(spark, str(tmp_path / "t"), df)
-    t.append(spark.createDataFrame([(100, 1.0)], "k long, v double"))
-
-    r = IcebergStreamReader(str(tmp_path / "t"), skip_non_appends=False)
-    rows, off = r.read(r.initialOffset())
-    assert sorted(x[0] for x in rows) == sorted(list(range(10)) + [100])
-    assert off == {"seq": 2}
-    # resume: nothing new
-    rows2, off2 = r.read(off)
-    assert list(rows2) == [] and off2 == {"seq": 2}
-
-    t.compact()  # replace: must be skipped
-    t.append(spark.createDataFrame([(200, 2.0)], "k long, v double"))
-    rows3, off3 = r.read(off)
-    assert [x[0] for x in rows3] == [200] and off3 == {"seq": 4}
-    # deterministic replay of a pinned range
-    assert [x[0] for x in r.readBetweenOffsets(off, off3)] == [200]
-
-    t.delete_where(F.col("k") == 0, mode="merge-on-read")
-    with pytest.raises(ValueError, match="cannot retract"):
-        r.read(off3)
-    r_skip = IcebergStreamReader(str(tmp_path / "t"), skip_non_appends=True)
-    rows4, _ = r_skip.read(off3)
-    assert list(rows4) == []
-
-
 def test_bulk_stream_reader_partitions_contract(spark, tmp_path):
-    """The executor-parallel reader's contract, driven directly: offsets
-    match the simple flavor, partitions(start, end) yields one split
-    per planned data file (an empty range yields one empty split —
-    Spark requires >= 1), split decode is self-contained (pickle-shaped:
-    path + names only), and the delete-raise/skip rules hold at
-    planning time."""
+    """The stream reader's contract, driven directly (no streaming
+    engine): initial offset 0 consumes the whole lineage,
+    partitions(start, end) yields one split per planned data file (an
+    empty range yields one empty split — Spark requires >= 1), split
+    decode is self-contained (pickle-shaped: path + Arrow schema) and
+    yields Arrow record batches, a resumed range re-emits nothing, a
+    REPLACE snapshot is planned away, and the delete-raise/skip rules
+    hold at planning time."""
     import pickle
 
+    import pyarrow as pa
+
     from iceberg_examples_spark.sources.iceberg_stream_source import (
-        IcebergBulkStreamReader,
+        IcebergStreamReader,
     )
 
     df = spark.createDataFrame(
@@ -1749,9 +1713,18 @@ def test_bulk_stream_reader_partitions_contract(spark, tmp_path):
     t.append(
         spark.createDataFrame([(100, 1.0)], "k long, v double").coalesce(1)
     )
+    arrow_schema = pa.schema([("k", pa.int64()), ("v", pa.float64())])
 
-    r = IcebergBulkStreamReader(
-        str(tmp_path / "t"), skip_non_appends=False, names=["k", "v"]
+    def keys(reader, splits):
+        return [
+            k
+            for s in splits
+            for batch in reader.read(s)
+            for k in batch.column("k").to_pylist()
+        ]
+
+    r = IcebergStreamReader(
+        str(tmp_path / "t"), skip_non_appends=False, arrow_schema=arrow_schema
     )
     assert r.initialOffset() == {"seq": 0}
     end = r.latestOffset()
@@ -1759,30 +1732,32 @@ def test_bulk_stream_reader_partitions_contract(spark, tmp_path):
     splits = r.partitions(r.initialOffset(), end)
     assert len(splits) == 4  # 3 files from create + 1 from append
     # decode through pickle: what an executor worker actually receives
-    rows = [
-        row
-        for s in splits
-        for row in r.read(pickle.loads(pickle.dumps(s)))
-    ]
-    assert sorted(x[0] for x in rows) == sorted(list(range(12)) + [100])
-    # empty range: exactly one empty split
+    shipped = [pickle.loads(pickle.dumps(s)) for s in splits]
+    assert all(
+        isinstance(batch, pa.RecordBatch)
+        and batch.schema.equals(arrow_schema)
+        for s in shipped
+        for batch in r.read(s)
+    )
+    assert sorted(keys(r, shipped)) == sorted(list(range(12)) + [100])
+    # resume: nothing new, exactly one empty split
+    assert r.latestOffset() == end
     empty = r.partitions(end, end)
-    assert len(empty) == 1 and list(r.read(empty[0])) == []
+    assert len(empty) == 1 and keys(r, empty) == []
 
     t.compact()  # replace: planned away
     t.append(spark.createDataFrame([(200, 2.0)], "k long, v double"))
     nxt = r.latestOffset()
-    splits2 = r.partitions(end, nxt)
-    assert [x[0] for s in splits2 for x in r.read(s)] == [200]
+    assert nxt == {"seq": 4}
+    assert keys(r, r.partitions(end, nxt)) == [200]
 
     t.delete_where(F.col("k") == 0, mode="merge-on-read")
     with pytest.raises(ValueError, match="cannot retract"):
         r.partitions(nxt, r.latestOffset())
-    r_skip = IcebergBulkStreamReader(
-        str(tmp_path / "t"), skip_non_appends=True, names=["k", "v"]
+    r_skip = IcebergStreamReader(
+        str(tmp_path / "t"), skip_non_appends=True, arrow_schema=arrow_schema
     )
-    sp = r_skip.partitions(nxt, r_skip.latestOffset())
-    assert [x for s in sp for x in r_skip.read(s)] == []
+    assert keys(r_skip, r_skip.partitions(nxt, r_skip.latestOffset())) == []
 
 
 def test_entries_metadata_table(spark, tmp_path):
@@ -2927,3 +2902,89 @@ def test_changelog_fast_path_plan_shapes(spark, tmp_path):
     assert by_snap[2] == [("insert", 100, 100.0)]
     assert by_snap[3] == [("delete", 3, 3.0)]
     assert sorted(by_snap[4]) == [("delete", 5, 5.0), ("insert", 5, 999.0)]
+
+
+def test_changelog_reports_rows_a_dropped_delete_file_revives(
+    spark, tmp_path
+):
+    """A non-replace commit that DROPS a position-delete file brings the
+    rows it killed back. The change feed must list them as inserts, the
+    same events as the multiset diff of the two snapshots' full live
+    views: the append-only and delete-only fast paths may only run
+    while every previous delete file is still live."""
+    df = spark.createDataFrame(
+        [(i, float(i)) for i in range(10)], "k long, v double"
+    ).coalesce(1)
+    t = IcebergNativeTable.create(spark, str(tmp_path / "t"), df)
+
+    def commit_dropping_deletes(rows=None, kill=None):
+        # one commit: optional new rows, an optional new delete file,
+        # and every carried delete manifest dropped
+        meta, version = t._read_tree()
+        seq = meta["last-sequence-number"] + 1
+        manifest = None
+        if kill is not None:
+            coords = (
+                t.scan(with_coordinates=True)
+                .filter(kill)
+                .select("file_path", "pos")
+            )
+            files = t._write_pos_delete_files(coords, seq, t._plan()[2], meta)
+            manifest = t._write_delete_manifest(meta, seq, files, 1, None)
+        t._commit(
+            rows,
+            operation="append" if kill is None else "delete",
+            first=False,
+            delete_manifest=manifest,
+            base=(meta, version),
+            delete_rows_key="added-position-deletes",
+            carry_filter=lambda mf: None if mf.get("content", 0) else mf,
+        )
+
+    def events(df_):
+        return sorted(
+            (r["_change_type"], r["k"], r["v"]) for r in df_.collect()
+        )
+
+    def full_diff(prev_id, cur_id):
+        prev = t.scan(snapshot_id=prev_id).select("k", "v")
+        cur = t.scan(snapshot_id=cur_id).select("k", "v")
+        return sorted(
+            [("delete", r["k"], r["v"]) for r in prev.exceptAll(cur).collect()]
+            + [("insert", r["k"], r["v"]) for r in cur.exceptAll(prev).collect()]
+        )
+
+    t.delete_where(F.col("k") < 2, mode="merge-on-read")
+    # delete-shaped: a new delete file kills k=2, the old one (k 0, 1) goes
+    commit_dropping_deletes(kill=F.col("k") == 2)
+    # append-shaped: new rows land and the k=2 delete file goes
+    t.delete_where(F.col("k") == 3, mode="merge-on-read")
+    commit_dropping_deletes(
+        rows=spark.createDataFrame([(50, 50.0)], "k long, v double")
+    )
+    ids = [s["snapshot-id"] for s in t._metadata()["snapshots"]]
+    got = events(t.changelog_df(from_snapshot_id=ids[1], to_snapshot_id=ids[2]))
+    assert got == full_diff(ids[1], ids[2])
+    assert got == [("delete", 2, 2.0), ("insert", 0, 0.0), ("insert", 1, 1.0)]
+    got = events(t.changelog_df(from_snapshot_id=ids[3], to_snapshot_id=ids[4]))
+    assert got == full_diff(ids[3], ids[4])
+    assert got == [
+        ("insert", 2, 2.0), ("insert", 3, 3.0), ("insert", 50, 50.0)
+    ]
+
+
+def test_coordinate_scan_refuses_colliding_column_names(spark, tmp_path):
+    """``scan(with_coordinates=True)`` names its coordinates ``file_path``
+    and ``pos``; a table column of either name would be overwritten (and
+    dropped from delete events), so the scan raises instead."""
+    for col in ("pos", "file_path"):
+        t = IcebergNativeTable.create(
+            spark,
+            str(tmp_path / col),
+            spark.createDataFrame([(1, 7)], f"k long, {col} long"),
+        )
+        with pytest.raises(ValueError, match=repr(col)):
+            t.scan(with_coordinates=True)
+        with pytest.raises(ValueError, match=repr(col)):
+            t.delete_where(F.col("k") == 1, mode="merge-on-read")
+        assert t.scan().collect() == [(1, 7)]

@@ -1,4 +1,4 @@
-"""Admission control for the native Iceberg streaming sources
+"""Admission control for the native Iceberg streaming source
 (``max_files_per_microbatch``): file-granular offsets, bounded
 micro-batches, exact mid-snapshot replay. The Python DataSource API has
 no engine-pushed ReadLimit, so the bound lives in the source — these
@@ -13,13 +13,12 @@ from pyspark.sql import functions as F
 
 from iceberg_examples_spark.sources.iceberg_native import IcebergNativeTable
 from iceberg_examples_spark.sources.iceberg_stream_source import (
-    IcebergNativeBulkStreamSource,
-    IcebergNativeStreamSource,
     _advance_position,
     _files_between_positions,
     _lineage,
     _pos,
     _read_meta,
+    _register,
 )
 
 
@@ -83,160 +82,19 @@ def test_files_between_positions_partitions_cleanly(table_3_commits):
     assert pos == {"seq": 3}
 
 
-def _register(spark, source):
-    try:
-        spark.dataSource.register(source)
-    except Exception as e:
-        if "already" not in str(e).lower():
-            raise
-
-
-def test_simple_reader_bounded_drain_exact(
+def test_stream_reader_bounded_drain_exact(
     spark, tmp_path, table_3_commits
 ):
-    """Simple reader: admission is exact across restarts (read() gets
-    the checkpointed start). Drain the 9-file table with bound 2: every
-    micro-batch carries at most 2 files' rows, the union is exact, and
-    at least 5 batches were needed — the bound sliced the backlog even
-    though each availableNow start is a fresh run."""
-    _register(spark, IcebergNativeStreamSource)
-    out_counts = []
-    rows = set()
-
-    def sink(b, _epoch):
-        got = [r["k"] for r in b.select("k").collect()]
-        if got:
-            out_counts.append(len(got))
-            rows.update(got)
-
-    ckpt = str(tmp_path / "ckpt_simple")
-    for _ in range(12):  # single-batch fallback: re-drain to exhaustion
-        q = (
-            spark.readStream.format("icebergnative_stream")
-            .option("path", table_3_commits.location)
-            .option("max_files_per_microbatch", "2")
-            .load()
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .foreachBatch(sink)
-            .start()
-        )
-        q.awaitTermination()
-        if len(rows) == 90:
-            break
-    assert rows == set(range(90))
-    # the bound is on FILES (2/batch); rows per file vary slightly with
-    # repartition's distribution, so cap at 2 x the largest file
-    _, _, data, _, _ = table_3_commits._plan()
-    max_file_rows = max(d["record_count"] for d in data)
-    assert max(out_counts) <= 2 * max_file_rows, out_counts
-    assert len(out_counts) >= 5, out_counts
-    # a fresh drain on the caught-up checkpoint emits nothing
-    before = len(out_counts)
-    q = (
-        spark.readStream.format("icebergnative_stream")
-        .option("path", table_3_commits.location)
-        .option("max_files_per_microbatch", "2")
-        .load()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .foreachBatch(sink)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(out_counts) == before
-
-
-def test_bulk_reader_bounds_after_first_batch(spark, tmp_path):
-    """Bulk reader: the engine's first call each run is latestOffset
-    with no floor, so batch 1 is unbounded by design; from batch 2 on,
-    the ratcheted floor bounds every micro-batch. A long-running
-    processingTime stream over a table that grows 6 files after start
-    must consume the growth in >= 3 bounded batches of <= 2 files."""
-    import time
-
-    _register(spark, IcebergNativeBulkStreamSource)
-    loc = str(tmp_path / "t")
-
-    def mk(lo, hi, nfiles):
-        return spark.createDataFrame(
-            [(i, float(i)) for i in range(lo, hi)], "k long, v double"
-        ).repartition(nfiles)
-
-    t = IcebergNativeTable.create(spark, loc, mk(0, 10, 1))
-    batches = []
-    rows = set()
-
-    def sink(b, _epoch):
-        got = [r["k"] for r in b.select("k").collect()]
-        if got:
-            batches.append(len(got))
-            rows.update(got)
-
-    q = (
-        spark.readStream.format("icebergnative_stream_bulk")
-        .option("path", loc)
-        .option("max_files_per_microbatch", "2")
-        .load()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_bulk"))
-        .trigger(processingTime="250 milliseconds")
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while len(rows) < 10 and time.time() < deadline:
-            time.sleep(0.25)
-        assert rows == set(range(10)), "initial commit not drained"
-        # grow the table by 6 files across two commits while running
-        t.append(mk(10, 40, 3))
-        t.append(mk(40, 70, 3))
-        while len(rows) < 70 and time.time() < deadline:
-            time.sleep(0.25)
-    finally:
-        q.stop()
-    assert rows == set(range(70))
-    # growth batches (everything after the first) are file-bounded
-    _, _, data, _, _ = t._plan()
-    max_file_rows = max(d["record_count"] for d in data)
-    growth = batches[1:]
-    assert len(growth) >= 3, batches
-    assert all(n <= 2 * max_file_rows for n in growth), batches
-
-
-def test_max_files_option_validation():
-    """'0'/negatives/garbage must raise, not silently unbound (r11
-    ADVICE: truthiness-gating made '0' mean 'no limit')."""
-    from iceberg_examples_spark.sources.iceberg_stream_source import (
-        _parse_max_files,
-    )
-
-    assert _parse_max_files({}) is None
-    assert _parse_max_files({"max_files_per_microbatch": "2"}) == 2
-    for bad in ("0", "-3", "x", ""):
-        with pytest.raises(ValueError, match="max_files_per_microbatch"):
-            _parse_max_files({"max_files_per_microbatch": bad})
-
-
-def test_bulk_reader_admission_channel_exact(
-    spark, tmp_path, table_3_commits
-):
-    """The bulk twin of the simple reader's exact-admission drain:
-    with ``admission_channel`` (seeded at {"seq": 0} the way an
-    operator provisions it), EVERY micro-batch — including the first
-    of every availableNow run — admits at most 2 files, the drained
-    union is exact, and the caught-up checkpoint re-drain emits
-    nothing."""
-    import json as _json
-
-    _register(spark, IcebergNativeBulkStreamSource)
+    """Admission is exact across restarts: drain the 9-file table with
+    bound 2 through repeated availableNow runs on one checkpoint. Each
+    run is a restarted query, so its FIRST micro-batch is bounded only
+    because the engine hands the reader the checkpointed offset
+    (partitions(last, last)) before asking for a new one. Every
+    micro-batch carries at most 2 files' rows, the union is exact, at
+    least 5 batches were needed, and the caught-up checkpoint re-drain
+    emits nothing."""
+    _register(spark)
     t = table_3_commits
-    channel = str(tmp_path / "admission.offset")
-    with open(channel, "w") as f:
-        _json.dump({"seq": 0}, f)
     out_counts = []
     rows = set()
 
@@ -246,14 +104,13 @@ def test_bulk_reader_admission_channel_exact(
             out_counts.append(len(got))
             rows.update(got)
 
-    ckpt = str(tmp_path / "ckpt_bulk_channel")
+    ckpt = str(tmp_path / "ckpt")
 
     def drain():
         q = (
-            spark.readStream.format("icebergnative_stream_bulk")
+            spark.readStream.format("icebergnative_stream")
             .option("path", t.location)
             .option("max_files_per_microbatch", "2")
-            .option("admission_channel", channel)
             .load()
             .writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
@@ -268,11 +125,83 @@ def test_bulk_reader_admission_channel_exact(
         drain()
         if len(out_counts) == before:
             break
+    assert len(out_counts) == before, "not caught up after 12 drains"
     assert rows == set(range(90))
+    # the bound is on FILES (2/batch); rows per file vary slightly with
+    # repartition's distribution, so cap at 2 x the largest file
     _, _, data, _, _ = t._plan()
     max_file_rows = max(d["record_count"] for d in data)
     assert all(n <= 2 * max_file_rows for n in out_counts), out_counts
     assert len(out_counts) >= 5, out_counts
-    # channel converged on the tip, canonical legacy shape
-    with open(channel) as f:
-        assert _json.load(f) == {"seq": 3}
+
+
+def test_bulk_reader_bounds_after_first_batch(spark, tmp_path):
+    """A long-running processingTime stream bounds EVERY micro-batch,
+    the first included (a fresh query's first latestOffset bounds from
+    the initial offset): a table that starts with 4 files and grows 6
+    more after start is consumed in batches of <= 2 files — at least 2
+    for the initial files and 3 for the growth."""
+    import time
+
+    _register(spark)
+    loc = str(tmp_path / "t")
+
+    def mk(lo, hi, nfiles):
+        return spark.createDataFrame(
+            [(i, float(i)) for i in range(lo, hi)], "k long, v double"
+        ).repartition(nfiles)
+
+    t = IcebergNativeTable.create(spark, loc, mk(0, 40, 4))
+    batches = []
+    rows = set()
+
+    def sink(b, _epoch):
+        got = [r["k"] for r in b.select("k").collect()]
+        if got:
+            batches.append(len(got))
+            rows.update(got)
+
+    q = (
+        spark.readStream.format("icebergnative_stream")
+        .option("path", loc)
+        .option("max_files_per_microbatch", "2")
+        .load()
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="250 milliseconds")
+        .foreachBatch(sink)
+        .start()
+    )
+    try:
+        deadline = time.time() + 60
+        while len(rows) < 40 and time.time() < deadline:
+            time.sleep(0.25)
+        assert rows == set(range(40)), "initial commit not drained"
+        initial = len(batches)
+        # grow the table by 6 files across two commits while running
+        t.append(mk(40, 70, 3))
+        t.append(mk(70, 100, 3))
+        while len(rows) < 100 and time.time() < deadline:
+            time.sleep(0.25)
+    finally:
+        q.stop()
+    assert rows == set(range(100))
+    _, _, data, _, _ = t._plan()
+    max_file_rows = max(d["record_count"] for d in data)
+    # every batch, the first included, admits at most 2 files
+    assert all(n <= 2 * max_file_rows for n in batches), batches
+    assert initial >= 2 and len(batches) - initial >= 3, batches
+
+
+def test_max_files_option_validation():
+    """'0'/negatives/garbage must raise, not silently unbound (r11
+    ADVICE: truthiness-gating made '0' mean 'no limit')."""
+    from iceberg_examples_spark.sources.iceberg_stream_source import (
+        _parse_max_files,
+    )
+
+    assert _parse_max_files({}) is None
+    assert _parse_max_files({"max_files_per_microbatch": "2"}) == 2
+    for bad in ("0", "-3", "x", ""):
+        with pytest.raises(ValueError, match="max_files_per_microbatch"):
+            _parse_max_files({"max_files_per_microbatch": bad})

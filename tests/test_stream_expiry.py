@@ -1,7 +1,7 @@
 """Streaming reads of a native Iceberg table after ``expire_snapshots``.
 
 Expiry removes old snapshots from the metadata while the current
-snapshot still names its expired parent. The stream sources walk the
+snapshot still names its expired parent. The stream source walks the
 lineage through the table's own reader, which stops at the oldest
 retained ancestor: a stream whose checkpoint already consumed everything
 expired keeps draining, and one whose checkpoint still needed an expired
@@ -13,7 +13,6 @@ import pytest
 
 from iceberg_examples_spark.sources.iceberg_native import IcebergNativeTable
 from iceberg_examples_spark.sources.iceberg_stream_source import (
-    IcebergNativeBulkStreamSource,
     IcebergNativeStreamSource,
 )
 
@@ -47,9 +46,7 @@ def _drainer(spark, source, location, ckpt):
     return drain
 
 
-@pytest.mark.parametrize(
-    "source", [IcebergNativeStreamSource, IcebergNativeBulkStreamSource]
-)
+@pytest.mark.parametrize("source", [IcebergNativeStreamSource])
 def test_drain_after_expiring_consumed_snapshots(spark, tmp_path, source):
     t = IcebergNativeTable.create(spark, str(tmp_path / "t"), _batch(spark, 0))
     t.append(_batch(spark, 10))

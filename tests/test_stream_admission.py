@@ -82,31 +82,22 @@ def test_files_between_positions_partitions_cleanly(table_3_commits):
     assert pos == {"seq": 3}
 
 
-def test_stream_reader_bounded_drain_exact(
-    spark, tmp_path, table_3_commits
-):
-    """Admission is exact across restarts: drain the 9-file table with
-    bound 2 through repeated availableNow runs on one checkpoint. Each
-    run is a restarted query, so its FIRST micro-batch is bounded only
-    because the engine hands the reader the checkpointed offset
-    (partitions(last, last)) before asking for a new one. Every
-    micro-batch carries at most 2 files' rows, the union is exact, at
-    least 5 batches were needed, and the caught-up checkpoint re-drain
-    emits nothing."""
+def _drain_runs(spark, t, ckpt, max_runs=12):
+    """Repeated availableNow runs with bound 2 on one checkpoint until a
+    run emits nothing. Returns (per-run lists of non-empty micro-batch
+    row counts, union of rows seen)."""
     _register(spark)
-    t = table_3_commits
-    out_counts = []
+    runs = []
     rows = set()
 
     def sink(b, _epoch):
         got = [r["k"] for r in b.select("k").collect()]
         if got:
-            out_counts.append(len(got))
+            runs[-1].append(len(got))
             rows.update(got)
 
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
+    for _ in range(max_runs):
+        runs.append([])
         q = (
             spark.readStream.format("icebergnative_stream")
             .option("path", t.location)
@@ -119,20 +110,57 @@ def test_stream_reader_bounded_drain_exact(
             .start()
         )
         q.awaitTermination()
-
-    for _ in range(12):
-        before = len(out_counts)
-        drain()
-        if len(out_counts) == before:
+        if not runs[-1]:
             break
-    assert len(out_counts) == before, "not caught up after 12 drains"
-    assert rows == set(range(90))
+    return runs, rows
+
+
+def _max_file_rows(t):
     # the bound is on FILES (2/batch); rows per file vary slightly with
     # repartition's distribution, so cap at 2 x the largest file
     _, _, data, _, _ = t._plan()
-    max_file_rows = max(d["record_count"] for d in data)
-    assert all(n <= 2 * max_file_rows for n in out_counts), out_counts
+    return max(d["record_count"] for d in data)
+
+
+def test_simple_reader_bounded_drain_exact(
+    spark, tmp_path, table_3_commits
+):
+    """Admission is exact across restarts: drain the 9-file table with
+    bound 2 through repeated availableNow runs on one checkpoint. Every
+    micro-batch carries at most 2 files' rows, the union is exact, at
+    least 5 batches were needed, and the caught-up checkpoint re-drain
+    emits nothing."""
+    t = table_3_commits
+    runs, rows = _drain_runs(spark, t, str(tmp_path / "ckpt"))
+    assert runs[-1] == [], f"not caught up after {len(runs)} drains"
+    assert rows == set(range(90))
+    out_counts = [n for run in runs for n in run]
+    assert all(n <= 2 * _max_file_rows(t) for n in out_counts), out_counts
     assert len(out_counts) >= 5, out_counts
+
+
+def test_bulk_reader_admission_channel_exact(
+    spark, tmp_path, table_3_commits
+):
+    """Exact admission needs no side channel: each availableNow run is a
+    restarted query, and its FIRST micro-batch is bounded only because
+    the engine hands the reader the checkpointed offset
+    (partitions(last, last)) before asking for a new one. The first
+    batch of every run admits at most 2 files, the drain is exact, and
+    the checkpoint's last committed offset converges on the tip in the
+    canonical {"seq": N} shape."""
+    from iceberg_examples_spark.sources.iceberg_stream_source import (
+        _last_committed_offset,
+    )
+
+    t = table_3_commits
+    ckpt = str(tmp_path / "ckpt")
+    runs, rows = _drain_runs(spark, t, ckpt)
+    assert rows == set(range(90))
+    firsts = [run[0] for run in runs if run]
+    assert len(firsts) >= 2, runs
+    assert all(n <= 2 * _max_file_rows(t) for n in firsts), runs
+    assert _last_committed_offset(ckpt) == {"seq": 3}
 
 
 def test_bulk_reader_bounds_after_first_batch(spark, tmp_path):
